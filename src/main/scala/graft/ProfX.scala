@@ -3,8 +3,9 @@ import org.apache.spark.sql.SparkSession
 object ProfX {
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq else Seq("q_broadcast_join")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -16,7 +16,13 @@ import org.apache.spark.sql.types._
   * Reads are PERMISSIVE with a `_corrupt_record` column: a malformed payload
   * row degrades to nulls and flows out through the pipeline's existing
   * validity filters, mirroring the reference's error→empty-result semantics
-  * (`main.py:51-57`, SURVEY.md §2.10).
+  * (`main.py:51-57`, SURVEY.md §2.10). A line that parses but carries a
+  * field of the wrong JSON type (`"id":"abc"`) keeps its other fields and
+  * nulls only that one (Spark's partial results), as the DuckDB oracle's
+  * `read_json(..., ignore_errors=true)` does.
+  *
+  * Both reads are Spark's built-in JSON file scan, which prunes columns
+  * (`_corrupt_record` included) and takes pushed filters itself.
   *
   * At scale: JSON-lines snapshots split by line, so a 100 TB measurement
   * snapshot fans out across executors with no driver involvement; the
@@ -62,24 +68,15 @@ object Snapshots {
     StructField("date", StringType),
     StructField("_corrupt_record", StringType)))
 
-  /** Reads go through the DataSourceV2 connector ([[SnapshotSource]]):
-    * partition-per-page scans with connector-level iso/monitor/mobile
-    * filter pushdown — the reference's server-side query surface made
-    * literal. Parse semantics are bit-compatible with the PERMISSIVE JSON
-    * reader these methods previously used (`q_flagship`'s oracle hash is
-    * pinned on it).
-    */
+  /** Station snapshot with the corrupt-record column dropped. */
   def readLocations(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("graft-snapshot").schema(locationSchema)
-      .load(path)
-      .drop("_corrupt_record")
+    spark.read.schema(locationSchema).json(path).drop("_corrupt_record")
 
   /** Latest-measurement snapshot, flattened to the pipeline's input shape
     * (`AirQuality.run` expects `datetime_utc`/`datetime_local` columns).
     */
   def readLatest(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("graft-snapshot").schema(latestSchema)
-      .load(path)
+    spark.read.schema(latestSchema).json(path)
       .select(col("location_id"), col("sensorsId"), col("value"), col("unit"),
         col("datetime.utc").as("datetime_utc"),
         col("datetime.local").as("datetime_local"),

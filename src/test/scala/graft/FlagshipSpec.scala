@@ -228,17 +228,14 @@ class FlagshipSpec extends SparkTestBase {
     }
     val plans = flatten(out.queryExecution.sparkPlan)
     // 1. Column pruning reaches both snapshot scans: the PERMISSIVE-mode
-    //    _corrupt_record column is dropped at the SCAN (readSchema), not
+    //    _corrupt_record column is dropped at the SCAN (requiredSchema), not
     //    after it — at 100 TB that column is a second copy of every
     //    malformed payload. explode(sensors) must not widen the scan back.
-    //    (The snapshots now arrive through the DSv2 connector, so the scan
-    //    node is BatchScanExec over SnapshotScan, not a file scan.)
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val scans = plans.collect { case b: BatchScanExec => b }
+    val scans = plans.collect { case f: FileSourceScanExec => f }
     assert(scans.size >= 2, s"expected both snapshot scans, saw ${scans.size}")
-    scans.foreach { b =>
-      assert(!b.scan.readSchema().fieldNames.contains("_corrupt_record"),
-        s"unpruned _corrupt_record in scan: ${b.scan.readSchema().catalogString}")
+    scans.foreach { f =>
+      assert(!f.requiredSchema.fieldNames.contains("_corrupt_record"),
+        s"unpruned _corrupt_record in scan: ${f.requiredSchema.catalogString}")
     }
     // 2. Every join in the flagship is a broadcast: the candidate-sensor
     //    map, the city config, the one-row cutoff and the chosen-station

@@ -41,11 +41,19 @@ class SnapshotsSpec extends SparkTestBase {
     val dir = tempDir("corrupt")
     val good = """{"city":"Warsaw","id":7,"name":"OK","coordinates":{"latitude":52.0,"longitude":21.0},"datetimeLast":{"utc":"2025-09-07T00:00:00Z"},"sensors":[{"id":1,"parameter":{"name":"pm25","units":"µg/m³"}}]}"""
     val bad = """{"city": NOT JSON AT ALL"""
+    // valid JSON, one field of the wrong type
+    val wrongType = """{"city":"Krakow","id":"abc","name":"Typo"}"""
     Files.write(java.nio.file.Paths.get(dir, "snap.json"),
-      java.util.Arrays.asList(good, bad))
+      java.util.Arrays.asList(good, bad, wrongType))
     val df = Snapshots.readLocations(spark, dir)
-    assert(df.count() == 2)
-    assert(df.filter(col("id").isNull).count() == 1) // corrupt row → nulls
+    assert(df.count() == 3)
+    // unparseable line → an all-null row
+    assert(df.filter(df.columns.map(col(_).isNull).reduce(_ && _)).count() == 1)
+    // wrong-typed field → only that field is null, the row keeps the rest
+    val typo = df.filter(col("city") === "Krakow").collect()
+    assert(typo.length == 1)
+    assert(typo.head.isNullAt(typo.head.fieldIndex("id")))
+    assert(typo.head.getAs[String]("name") == "Typo")
     assert(df.filter(col("id") === 7).count() == 1)
   }
 }
