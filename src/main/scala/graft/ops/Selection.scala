@@ -9,14 +9,15 @@ import org.apache.spark.sql.functions._
   * §7.4): walk candidates in coverage-rank order and stop once at least
   * `minUsed` candidates are taken AND all `targets` are covered.
   *
-  * Two encodings:
-  *   - [[greedyPrefix]]: pure-relational window encoding (cumulative
-  *     first-coverage flags) — oracle-checkable, one window shuffle, scales
-  *     to any number of groups because state lives per-(group,rank) row;
-  *   - [[greedySelect]]: driver-side loop for the flagship pipeline — the
-  *     reference caps candidates at 40/city, so the collected aggregate is
-  *     tiny by construction; chosen ids are semi-joined back (no
-  *     collect of row data, only of the ≤40-row candidate summary).
+  * Two window encodings:
+  *   - [[greedyPrefix]]: events-shaped input (cumulative first-coverage
+  *     flags), the declared query `q_greedy_prefix` — one window shuffle,
+  *     scales to any number of groups because state lives per-(group,rank)
+  *     row;
+  *   - [[greedyWindow]]: the flagship pipeline's walk over its valid
+  *     measurement rows, each already carrying its candidate's rank — the
+  *     whole selection stays inside the one lazy plan, with no collect and
+  *     no cache.
   */
 object Selection {
 
@@ -80,37 +81,37 @@ object Selection {
       .orderBy("grp", "rank")
   }
 
-  /** Driver-side greedy walk (`main.py:220-279` shape) over a ranked,
-    * per-group candidate summary: `(group, candidateId, emittedParams)`
-    * already ordered by rank within group, where `emittedParams` is the set
-    * of parameters the candidate actually emitted VALID measurements for
-    * (empty = no valid rows survived F6/F7/F8). Mirrors the reference's
-    * interleaving of measurement validation with selection: every walked
-    * candidate is selected (its rows go to the output), but only
-    * candidates with ≥ 1 valid row count toward the `minUsed` stop
-    * (`main.py:273-274`) and only emitted parameters grow the covered set
-    * (`main.py:270`) — a station whose measurements all fail validation
-    * forces the walk onward. Input must be small (the reference caps at
-    * MAX_CANDIDATES = 40 per group) — callers aggregate + limit BEFORE
-    * collecting.
+  /** Greedy walk (`main.py:220-279`) as windows over per-row input. Each
+    * row of `rows` belongs to one candidate and carries the candidate's
+    * `city`, its `rank` within the city and one parameter `pname` it
+    * emitted. The result keeps the rows of the selected prefix, with the
+    * input's columns:
+    *   - `used` = `dense_rank()` over (city ORDER BY rank): candidates with
+    *     rows up to and including this one (`main.py:273-274`);
+    *   - `covered` = distinct target params over the same RANGE frame, so
+    *     the peer rows of one candidate share it (`main.py:270`);
+    *   - the stop rank is the first rank where `used ≥ minUsed` and every
+    *     target is covered; no stop rank keeps the whole city.
+    *
+    * Exact against the walk that visits every ranked candidate but counts
+    * only those that emitted something: a candidate without rows moves
+    * neither `used` nor `covered`, so the first satisfying rank is always a
+    * candidate with rows, and only such candidates reach the output. That
+    * argument needs `minUsed ≥ 1` (with 0 the walk could stop on a row-less
+    * first candidate).
     */
-  def greedySelect(
-      ranked: Seq[(String, Long, Set[String])],
-      targets: Set[String],
-      minUsed: Int = 3): Map[String, Seq[Long]] =
-    ranked.groupBy(_._1).map { case (grp, cands) =>
-      val sel = Vector.newBuilder[Long]
-      var covered = Set.empty[String]
-      var used = 0
-      val it = cands.iterator
-      var done = false
-      while (it.hasNext && !done) {
-        val (_, id, params) = it.next()
-        sel += id
-        covered ++= params
-        if (params.nonEmpty) used += 1
-        if (used >= minUsed && targets.subsetOf(covered)) done = true
-      }
-      grp -> sel.result()
-    }
+  def greedyWindow(rows: DataFrame, targets: Set[String], minUsed: Int): DataFrame = {
+    require(minUsed >= 1, s"greedyWindow: minUsed must be >= 1, got $minUsed")
+    val byCity = Window.partitionBy("city")
+    val byRank = byCity.orderBy("rank")
+    val upToHere = byRank.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    val inTarget = col("pname").isin(targets.toSeq: _*)
+    rows
+      .withColumn("_used", dense_rank().over(byRank))
+      .withColumn("_covered", size(collect_set(when(inTarget, col("pname"))).over(upToHere)))
+      .withColumn("_stop", min(when(col("_used") >= minUsed &&
+        col("_covered") >= targets.size, col("rank"))).over(byCity))
+      .filter(col("_stop").isNull || col("rank") <= col("_stop"))
+      .drop("_used", "_covered", "_stop")
+  }
 }

@@ -18,9 +18,11 @@ import graft.ops.Selection
   * Scale design: the per-station N+1 fetch (`main.py:220-279`) becomes a
   * single broadcast hash join of measurements against the (tiny, ≤40
   * stations/city) selected-sensor map; the per-city Python loop becomes a
-  * `city` column so ANY number of cities runs in one plan. The only
-  * collect() is the ≤40-row/city candidate summary that feeds the greedy
-  * walk — bounded by MAX_CANDIDATES, not by data size.
+  * `city` column so ANY number of cities runs in one plan. [[run]] returns
+  * one lazy DataFrame — no action, no cache: the phase decision is a
+  * per-city window count and the greedy walk is [[Selection.greedyWindow]],
+  * so the caller's single action (e.g. [[writeCsv]]) runs the whole
+  * pipeline as one SQL execution.
   */
 object AirQuality {
 
@@ -55,7 +57,8 @@ object AirQuality {
 
   /** Full pipeline over location + measurement snapshots. Both inputs are
     * DataFrames so the same plan runs on fixture data, JSON snapshots of the
-    * real API, or a 100 TB measurement lake.
+    * real API, or a 100 TB measurement lake. Runs no job itself: the
+    * result is lazy, and `spark` is unused (kept for existing callers).
     */
   def run(spark: SparkSession, locations: DataFrame, latest: DataFrame,
       cities: DataFrame,
@@ -79,10 +82,7 @@ object AirQuality {
     // explicitly wherever they matter.
     val coordsMissing = col("coordinates.latitude").isNull ||
       col("coordinates.longitude").isNull
-    val withCfg = locations
-      .join(broadcast(cityCfg), "city")
-      .withColumn("dist_m", haversineMeters(col("lat"), col("lon"),
-        col("coordinates.latitude"), col("coordinates.longitude")))
+    val inPrimary = coordsMissing || col("dist_m") <= col("radius_m")
     // Phase decision: the reference counts the RAW primary payload —
     // `len(results)` at `main.py:119-122` — BEFORE any client-side guard
     // (the coordinate guard + 75 km filter exist only inside the fallback,
@@ -92,15 +92,15 @@ object AirQuality {
     // it COUNTS as part of the primary payload (the server that returned
     // it knew its position; inherent divergence: a null-coordinate station
     // actually outside the radius would not have been in the real payload,
-    // but a snapshot cannot tell). Driver-side `if` over one row per
-    // configured city (SURVEY §3.2), never data-sized.
-    val primaryCounts = withCfg
-      .filter(coordsMissing || col("dist_m") <= col("radius_m"))
-      .groupBy("city").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val fallbackCities = cityCfg.select("city").collect().map(_.getString(0))
-      .filter(c => primaryCounts.getOrElse(c, 0L) < MinPrimaryResults).toSet
-    val isFallback = col("city").isin(fallbackCities.toSeq: _*)
+    // but a snapshot cannot tell). A per-city window count carried as the
+    // `is_fb` column: the decision stays inside the plan, no driver round
+    // trip.
+    val located = locations
+      .join(broadcast(cityCfg), "city")
+      .withColumn("dist_m", haversineMeters(col("lat"), col("lon"),
+        col("coordinates.latitude"), col("coordinates.longitude")))
+      .withColumn("is_fb", coalesce(sum(when(inPrimary, 1))
+        .over(Window.partitionBy("city")), lit(0)) < MinPrimaryResults)
     // F3 is a FALLBACK-ONLY guard, exactly as in the reference: the
     // client-side coordinate check + 75 km filter exist only inside the
     // fallback scan (`main.py:136-143`), while `_valid_active_location`
@@ -111,10 +111,9 @@ object AirQuality {
     // count above: a null-coordinate row is treated as part of the 25 km
     // payload because the server that returned it knew its position; a
     // snapshot cannot re-test that.
-    val geo = withCfg
-      .filter(when(isFallback,
-          !coordsMissing && col("dist_m") <= FallbackRadiusM)
-        .otherwise(coordsMissing || col("dist_m") <= col("radius_m")))
+    val geo = located.filter(when(col("is_fb"),
+        !coordsMissing && col("dist_m") <= FallbackRadiusM)
+      .otherwise(inPrimary))
 
     // F1: candidate-stage freshness (`main.py:149`); missing/unparseable
     // last-seen DROPPED (null >= x is null → filtered)
@@ -128,8 +127,10 @@ object AirQuality {
     // they neither count as matches nor accept measurements.
     val sensors = fresh.select(col("city"), col("id").as("loc_id"),
         nameCoalesce(col("name"), col("locality"), col("id")).as("loc_name"),
-        col("dist_m"), explode(col("sensors")).as("sensor"))
+        col("dist_m"), col("is_fb"), col("max_seen"),
+        explode(col("sensors")).as("sensor"))
       .select(col("city"), col("loc_id"), col("loc_name"), col("dist_m"),
+        col("is_fb"), col("max_seen"),
         col("sensor.id").as("sensor_id"),
         lower(col("sensor.parameter.name")).as("pname"),
         unitCoalesce(col("sensor.parameter.units"), col("sensor.units"),
@@ -144,76 +145,51 @@ object AirQuality {
     // ascending in the fallback path (`main.py:144`), the API's paging
     // order (stand-in: loc_id) in the primary path.
     val matched = sensors.filter(col("pname").isin(Parameters.toSeq: _*))
-    // Cached: ≤40 rows/city by construction, and consumed twice (the
-    // candidate-sensor join below and the greedy-summary join) — without the
-    // boundary the whole explode(sensors) aggregation re-runs per consumer.
+    // is_fb is constant per city, so grouping by it keeps the groups
+    // unchanged and carries it deterministically to the rank ordering.
     val candidates = matched
-      .groupBy("city", "loc_id")
+      .groupBy("city", "loc_id", "is_fb")
       .agg(countDistinct("sensor_id").as("matches"), min("dist_m").as("dist_m"))
       .withColumn("rank", row_number().over(Window.partitionBy("city")
         .orderBy(col("matches").desc,
-          when(isFallback, col("dist_m")).otherwise(lit(0.0)),
+          when(col("is_fb"), col("dist_m")).otherwise(lit(0.0)),
           col("loc_id"))))
       .filter(col("rank") <= MaxCandidates)
-      .cache()
+      .select("city", "loc_id", "rank")
 
     // J1 against ALL candidates (not only the eventually-chosen ones): the
     // reference interleaves measurement validation with selection
     // (`main.py:220-279`), so each candidate's VALID rows must be known
     // before the greedy walk. The candidate sensor map is ≤ cities × 40
-    // stations × sensors — always broadcast-tiny.
-    val candSensors = matched.join(
-      broadcast(candidates.select("city", "loc_id")), Seq("city", "loc_id"))
+    // stations × sensors — always broadcast-tiny. Each sensor row carries
+    // its candidate's rank into the walk, and the cutoff into F8.
+    val candSensors = matched.join(broadcast(candidates), Seq("city", "loc_id"))
     val meas = latest
       .withColumn("sid", col("sensorsId").try_cast("long"))
       .filter(sensorIdValid(col("sensorsId")))                       // F6
       .filter(numericValid(col("value")))                            // F7
     val dateStr = coalesce(col("datetime_utc"), col("datetime_local"), col("date"))
-    // Cached: this is the pipeline's dominant join (the full measurement
-    // scan against the broadcast candidate map) and it feeds BOTH the
-    // greedy-summary collect and the final projection. Its output is
-    // bounded — valid rows of ≤40 candidate stations/city — so the cache is
-    // small even when `latest` is a 100 TB lake, and the big scan+join
-    // executes exactly once instead of once per action.
     val valid = meas.join(broadcast(candSensors),
         meas("sid") === candSensors("sensor_id") &&
           meas("location_id") === candSensors("loc_id"))
-      .crossJoin(broadcast(cutoff))
       .filter(freshKeepNull(parseIsoTs(dateStr),                     // F8
         col("max_seen") - expr(s"INTERVAL $FreshDays DAYS")))
-      .cache()
 
-    // O4: greedy early-terminated selection — driver walk over the ≤40-row
-    // per-city summary (bounded by MAX_CANDIDATES, never by data volume).
-    // Each candidate carries the parameters it actually emitted valid
-    // measurements for: `used`/`covered` mirror `main.py:270-279`, so a
-    // station whose measurements all fail F6/F7/F8 is walked but does not
-    // count toward the ≥3 stop.
-    val perCand = valid.groupBy("city", "loc_id")
-      .agg(array_sort(collect_set("pname")).as("mparams"))
-    val summary = candidates.join(perCand, Seq("city", "loc_id"), "left")
-      .orderBy("city", "rank")
-      .select("city", "loc_id", "mparams")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        Option(r.getSeq[String](2)).map(_.toSet).getOrElse(Set.empty[String])))
-      .toSeq
-    val chosen = Selection.greedySelect(summary, Parameters, MinUsed)
-    val chosenIds = chosen.toSeq.flatMap { case (c, ids) => ids.map((c, _)) }
-    val chosenDf = spark.createDataFrame(chosenIds)
-      .toDF("city", "loc_id")
+    // O4: greedy early-terminated selection as windows over the valid rows.
+    // `used`/`covered` mirror `main.py:270-279`: a station whose
+    // measurements all fail F6/F7/F8 has no valid rows, so it is walked but
+    // never counts toward the ≥3 stop.
+    val selected = Selection.greedyWindow(valid, Parameters, MinUsed)
 
     // P3/P4/P7: valid rows of the chosen prefix, six-column projection;
     // city union is implicit (city is a column, not a loop)
-    val projected = valid
-      .join(broadcast(chosenDf), Seq("city", "loc_id"), "left_semi")
-      .select(
-        col("city"),
-        col("loc_name").as("location"),
-        col("pname").as("parameter"),
-        col("value"),
-        unitCoalesce(col("punit"), col("unit")).as("unit"),
-        dateStr.as("date"))
+    val projected = selected.select(
+      col("city"),
+      col("loc_name").as("location"),
+      col("pname").as("parameter"),
+      col("value"),
+      unitCoalesce(col("punit"), col("unit")).as("unit"),
+      dateStr.as("date"))
     // K3 observability: pipeline health counters ride the SAME plan as a
     // CollectMetrics node (no second scan of anything) — the Spark-native
     // form of the reference's response summary (`main.py:300-309`). Callers

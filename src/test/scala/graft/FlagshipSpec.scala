@@ -175,32 +175,67 @@ class FlagshipSpec extends SparkTestBase {
     assert(obs.get("n_empty_unit") == 0L) // every fixture sensor has a unit
   }
 
-  test("cache boundary: final projection reads `valid` from InMemoryRelation") {
+  test("one lazy plan: no cache, and the CSV write is a single SQL execution") {
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    import spark.implicits._
-    val a = mkLoc("T", 1, "A", 0.01, Seq(mkSensor(11, "pm25"), mkSensor(12, "o3"),
-      mkSensor(13, "pm10"), mkSensor(14, "no2")))
-    val b = mkLoc("T", 2, "B", 0.02, Seq(mkSensor(21, "pm25")))
-    val meas = Seq(mkMeas(1, 11, "1.0"), mkMeas(1, 12, "2.0"),
-      mkMeas(1, 13, "3.0"), mkMeas(1, 14, "4.0"), mkMeas(2, 21, "5.0"))
-    val out = AirQuality.run(spark, Seq(a, b).toDS().toDF(),
-      meas.toDS().toDF(), Seq(City("T", 0.0, 0.0)).toDS().toDF())
-    // The measurements⋈candidates join (`valid`) feeds both the greedy
-    // summary (already collected inside run()) and this final plan; the
-    // cache boundary means the final action replays an InMemoryRelation
-    // instead of re-executing the measurement scan + join. Logical plan, not
-    // executed plan: AQE's QueryStageExec wrapping hides physical subtrees.
-    val imrs = out.queryExecution.optimizedPlan.collect {
-      case r: InMemoryRelation => r
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val cacheManager = spark.sharedState.cacheManager
+    cacheManager.clearCache()
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executions.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        executions.incrementAndGet()
     }
-    assert(imrs.nonEmpty, "final flagship plan does not read the cached `valid`")
-    // and the action still computes the right rows from the cache
-    assert(out.collect().map(_.getString(1)).toSet == Set("A", "B"))
+    val dir = java.nio.file.Files.createTempDirectory("flagship1x").toString
+    org.apache.spark.TestListenerBus.drain(spark)
+    spark.listenerManager.register(listener)
+    try {
+      val out = AirQuality.flagship(spark)
+      AirQuality.writeCsv(out, dir)
+      org.apache.spark.TestListenerBus.drain(spark)
+      // run() builds the plan without running a job; writeCsv's write is
+      // the only execution, and nothing stays cached afterwards
+      assert(executions.get == 1, s"expected 1 SQL execution, saw ${executions.get}")
+      assert(cacheManager.isEmpty, "run() or writeCsv left a cached plan")
+      val imrs = out.queryExecution.optimizedPlan.collect {
+        case r: InMemoryRelation => r
+      }
+      assert(imrs.isEmpty, "flagship plan reads an InMemoryRelation")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+    }
+  }
+
+  test("two-phase geo: each city takes its own phase in one run") {
+    import spark.implicits._
+    // city P (0, 0) has 12 stations inside 25 km → primary; city F (10, 0)
+    // has 5 → 75 km fallback. A phase count not partitioned by city would
+    // see 17 and put both cities on the primary path.
+    // n stations ~1 km apart inside 25 km, plus one at ~50 km
+    def stations(city: String, lat0: Double, n: Int, id0: Long) = {
+      val sites = (1 to n).map(i => (id0 + i, s"$city-Near$i", lat0 + 0.01 * i)) :+
+        ((id0 + 50, s"$city-Mid50", lat0 + 0.45))
+      (sites.map { case (id, name, lat) =>
+          mkLoc(city, id, name, lat, Seq(mkSensor(10 * id, "pm25"))) },
+        sites.map { case (id, _, _) => mkMeas(id, 10 * id, "1.0") })
+    }
+    val (pLocs, pMeas) = stations("P", 0.0, 12, 100L)
+    val (fLocs, fMeas) = stations("F", 10.0, 5, 200L)
+    val got = AirQuality.run(spark, (pLocs ++ fLocs).toDS().toDF(),
+      (pMeas ++ fMeas).toDS().toDF(),
+      Seq(City("P", 0.0, 0.0), City("F", 10.0, 0.0)).toDS().toDF())
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(!got.contains(("P", "P-Mid50")))  // primary: 50 km is out
+    assert(got.count(_._1 == "P") == 12)
+    assert(got.contains(("F", "F-Mid50")))   // fallback: 50 km is in
+    assert(got.count(_._1 == "F") == 6)
   }
 
   test("flagship plan: pruned snapshot scans, every join a broadcast") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
     import graft.sources.Snapshots
     import spark.implicits._
@@ -212,21 +247,9 @@ class FlagshipSpec extends SparkTestBase {
     val out = AirQuality.run(spark,
       Snapshots.readLocations(spark, s"$base/locations.jsonl"),
       Snapshots.readLatest(spark, s"$base/latest.jsonl"), cities)
-    // pre-AQE physical plan (no QueryStageExec wrapping), recursing through
-    // the cache boundaries — the scans and the big joins live INSIDE the
-    // cached `valid`/`candidates` plans, which the outer explain hides.
-    // A cached plan is itself compiled under AQE, so its root is an
-    // AdaptiveSparkPlanExec LEAF: recurse into its inputPlan (the
-    // deterministic initial plan, same discipline as NoCrossJoinSpec).
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val here = p.collect { case x => x }
-      here ++ here.collect {
-        case s: InMemoryTableScanExec => flatten(s.relation.cachedPlan)
-        case a: AdaptiveSparkPlanExec => flatten(a.inputPlan)
-      }.flatten
-    }
-    val plans = flatten(out.queryExecution.sparkPlan)
+    // pre-AQE physical plan (no QueryStageExec wrapping): run() caches
+    // nothing, so the scans and every join sit in this one plan
+    val plans = out.queryExecution.sparkPlan.collect { case p => p }
     // 1. Column pruning reaches both snapshot scans: the PERMISSIVE-mode
     //    _corrupt_record column is dropped at the SCAN (requiredSchema), not
     //    after it — at 100 TB that column is a second copy of every
@@ -237,10 +260,10 @@ class FlagshipSpec extends SparkTestBase {
       assert(!f.requiredSchema.fieldNames.contains("_corrupt_record"),
         s"unpruned _corrupt_record in scan: ${f.requiredSchema.catalogString}")
     }
-    // 2. Every join in the flagship is a broadcast: the candidate-sensor
-    //    map, the city config, the one-row cutoff and the chosen-station
-    //    semi-join are all bounded-small by construction. A SortMergeJoin
-    //    or ShuffledHashJoin here means something bounded stopped being
+    // 2. Every join in the flagship is a broadcast: the city config, the
+    //    candidate map, the candidate-sensor map and the one-row cutoff are
+    //    all bounded-small by construction. A SortMergeJoin or
+    //    ShuffledHashJoin here means something bounded stopped being
     //    broadcast — the 100 TB measurement scan would shuffle.
     val shuffledJoins = plans.collect {
       case j: SortMergeJoinExec => j.nodeName
@@ -250,8 +273,7 @@ class FlagshipSpec extends SparkTestBase {
       s"flagship plans a shuffled join: ${shuffledJoins.mkString(", ")}")
     val bhj = plans.count(_.nodeName.contains("BroadcastHashJoin"))
     assert(bhj >= 3,
-      s"expected >=3 broadcast hash joins (config, candidate map, semi), saw $bhj")
-    spark.sharedState.cacheManager.clearCache() // run() caches valid/candidates
+      s"expected >=3 broadcast hash joins (config, candidate map, candidate-sensor map), saw $bhj")
   }
 
   test("K1 CSV sink: BOM, header, fixed column order, lossless round-trip") {
