@@ -59,6 +59,10 @@ object AirQuality {
     * DataFrames so the same plan runs on fixture data, JSON snapshots of the
     * real API, or a 100 TB measurement lake. Runs no job itself: the
     * result is lazy, and `spark` is unused (kept for existing callers).
+    *
+    * Output order: the result is ONE partition sorted by (city, location,
+    * parameter, value, date), so it is totally ordered without a range
+    * exchange. The freshness cutoff is a scalar subquery over `locations`.
     */
   def run(spark: SparkSession, locations: DataFrame, latest: DataFrame,
       cities: DataFrame,
@@ -70,10 +74,10 @@ object AirQuality {
       if (cities.columns.contains("radius_m")) cities
       else cities.withColumn("radius_m", lit(PrimaryRadiusM))
 
-    // data-derived freshness cutoff (max last-seen − 30 days)
-    val parsedLast = parseIsoTs(col("datetimeLast.utc"))
-    val cutoff = locations.agg(max(parseIsoTs(col("datetimeLast.utc")))
-      .as("max_seen"))
+    // data-derived freshness cutoff (max last-seen − 30 days): one scalar
+    // subquery, read by F1 and F8 alike (Spark plans it once and reuses it)
+    val cutoff = locations.agg(max(parseIsoTs(col("datetimeLast.utc")))).scalar() -
+      expr(s"INTERVAL $FreshDays DAYS")
 
     // ── two-phase geo plan (`main.py:107-144`) ──────────────────────────
     // distance to the city center, computed once. NOTE: haversineMeters does
@@ -94,7 +98,9 @@ object AirQuality {
     // actually outside the radius would not have been in the real payload,
     // but a snapshot cannot tell). A per-city window count carried as the
     // `is_fb` column: the decision stays inside the plan, no driver round
-    // trip.
+    // trip. This window's `hashpartitioning(city)` is the plan's one
+    // exchange: every later window but the greedy walk partitions by city
+    // or finer and rides it.
     val located = locations
       .join(broadcast(cityCfg), "city")
       .withColumn("dist_m", haversineMeters(col("lat"), col("lon"),
@@ -111,75 +117,80 @@ object AirQuality {
     // count above: a null-coordinate row is treated as part of the 25 km
     // payload because the server that returned it knew its position; a
     // snapshot cannot re-test that.
-    val geo = located.filter(when(col("is_fb"),
-        !coordsMissing && col("dist_m") <= FallbackRadiusM)
-      .otherwise(inPrimary))
-
     // F1: candidate-stage freshness (`main.py:149`); missing/unparseable
-    // last-seen DROPPED (null >= x is null → filtered)
-    val fresh = geo.crossJoin(broadcast(cutoff))
-      .filter(freshDropNull(parsedLast,
-        col("max_seen") - expr(s"INTERVAL $FreshDays DAYS")))
+    // last-seen DROPPED (null >= x is null → filtered). A stale station
+    // still counts toward the phase decision above.
+    val fresh = located.filter(
+      when(col("is_fb"), !coordsMissing && col("dist_m") <= FallbackRadiusM)
+        .otherwise(inPrimary) &&
+      freshDropNull(parseIsoTs(col("datetimeLast.utc")), cutoff))
 
     // explode sensors → per-sensor rows with P3 unit / P5 lowercase.
     // sensor_map fidelity (`main.py:153-161`): a falsy sensor id (null OR
     // 0) and a falsy parameter name (null OR "") never enter the map —
-    // they neither count as matches nor accept measurements.
-    val sensors = fresh.select(col("city"), col("id").as("loc_id"),
+    // they neither count as matches nor accept measurements; F5 keeps the
+    // target parameters only (null and "" are not among them).
+    val matched = fresh.select(col("city"), col("id").as("loc_id"),
         nameCoalesce(col("name"), col("locality"), col("id")).as("loc_name"),
-        col("dist_m"), col("is_fb"), col("max_seen"),
-        explode(col("sensors")).as("sensor"))
+        col("dist_m"), col("is_fb"), explode(col("sensors")).as("sensor"))
       .select(col("city"), col("loc_id"), col("loc_name"), col("dist_m"),
-        col("is_fb"), col("max_seen"),
-        col("sensor.id").as("sensor_id"),
+        col("is_fb"), col("sensor.id").as("sensor_id"),
         lower(col("sensor.parameter.name")).as("pname"),
         unitCoalesce(col("sensor.parameter.units"), col("sensor.units"),
           col("sensor.unit")).as("punit"))
       .filter(sensorIdValid(col("sensor_id")) &&
-        col("pname").isNotNull && col("pname") =!= "")
+        col("pname").isin(Parameters.toSeq: _*))
 
-    // F5 + A1: matched-SENSOR count per station (`len(matches)`,
-    // `main.py:162-167` — sensors, not distinct parameters: two pm25
-    // sensors count twice). O2: top-40 per city, ranked by matches; ties
-    // follow the order the reference's stable sort preserves — distance
-    // ascending in the fallback path (`main.py:144`), the API's paging
-    // order (stand-in: loc_id) in the primary path.
-    val matched = sensors.filter(col("pname").isin(Parameters.toSeq: _*))
-    // is_fb is constant per city, so grouping by it keeps the groups
+    // A1: matched-SENSOR count per station (`len(matches)`, `main.py:162-167`
+    // — sensors, not distinct parameters: two pm25 sensors count twice; a
+    // repeated sensor id counts once). O2: top-40 per city, ranked by
+    // matches; ties follow the order the reference's stable sort preserves —
+    // distance ascending in the fallback path (`main.py:144`), the API's
+    // paging order (stand-in: loc_id) in the primary path. Both are windows
+    // on the matched rows, so those rows ARE the candidate-sensor map:
+    //   - sensor_id is non-null here, so the set size is countDistinct;
+    //   - (matches, distance, loc_id) is one key per station and distinct
+    //     between stations, so dense_rank numbers stations as row_number
+    //     over grouped stations would.
+    // is_fb is constant per city, so partitioning by it keeps the stations
     // unchanged and carries it deterministically to the rank ordering.
-    val candidates = matched
-      .groupBy("city", "loc_id", "is_fb")
-      .agg(countDistinct("sensor_id").as("matches"), min("dist_m").as("dist_m"))
-      .withColumn("rank", row_number().over(Window.partitionBy("city")
+    val byStation = Window.partitionBy("city", "loc_id", "is_fb")
+    val candSensors = matched
+      .withColumns(Map(
+        "matches" -> size(collect_set("sensor_id").over(byStation)),
+        "st_dist" -> min("dist_m").over(byStation)))
+      .withColumn("rank", dense_rank().over(Window.partitionBy("city")
         .orderBy(col("matches").desc,
-          when(col("is_fb"), col("dist_m")).otherwise(lit(0.0)),
+          when(col("is_fb"), col("st_dist")).otherwise(lit(0.0)),
           col("loc_id"))))
       .filter(col("rank") <= MaxCandidates)
-      .select("city", "loc_id", "rank")
 
     // J1 against ALL candidates (not only the eventually-chosen ones): the
     // reference interleaves measurement validation with selection
     // (`main.py:220-279`), so each candidate's VALID rows must be known
     // before the greedy walk. The candidate sensor map is ≤ cities × 40
     // stations × sensors — always broadcast-tiny. Each sensor row carries
-    // its candidate's rank into the walk, and the cutoff into F8.
-    val candSensors = matched.join(broadcast(candidates), Seq("city", "loc_id"))
-    val meas = latest
-      .withColumn("sid", col("sensorsId").try_cast("long"))
-      .filter(sensorIdValid(col("sensorsId")))                       // F6
-      .filter(numericValid(col("value")))                            // F7
+    // its candidate's rank into the walk. F6/F7/F8 read only measurement
+    // columns and the cutoff, so they filter the measurements before the
+    // join.
     val dateStr = coalesce(col("datetime_utc"), col("datetime_local"), col("date"))
-    val valid = meas.join(broadcast(candSensors),
-        meas("sid") === candSensors("sensor_id") &&
-          meas("location_id") === candSensors("loc_id"))
-      .filter(freshKeepNull(parseIsoTs(dateStr),                     // F8
-        col("max_seen") - expr(s"INTERVAL $FreshDays DAYS")))
+    val valid = latest
+      .filter(sensorIdValid(col("sensorsId")) &&                     // F6
+        numericValid(col("value")) &&                                // F7
+        freshKeepNull(parseIsoTs(dateStr), cutoff))                  // F8
+      .join(broadcast(candSensors),
+        col("sensorsId").try_cast("long") === col("sensor_id") &&
+          col("location_id") === col("loc_id"))
 
     // O4: greedy early-terminated selection as windows over the valid rows.
     // `used`/`covered` mirror `main.py:270-279`: a station whose
     // measurements all fail F6/F7/F8 has no valid rows, so it is walked but
-    // never counts toward the ≥3 stop.
-    val selected = Selection.greedyWindow(valid, Parameters, MinUsed)
+    // never counts toward the ≥3 stop. The valid rows are measurements of
+    // at most 40 candidates per city — the size of the output, which
+    // writeCsv writes through one task anyway — so they move to ONE
+    // partition: the walk's city windows and the final sort need no further
+    // exchange, and no range-partition sample job.
+    val selected = Selection.greedyWindow(valid.repartition(1), Parameters, MinUsed)
 
     // P3/P4/P7: valid rows of the chosen prefix, six-column projection;
     // city union is implicit (city is a column, not a loop)
@@ -201,7 +212,8 @@ object AirQuality {
         // read 0, not null, on an empty result
         coalesce(sum(when(col("unit") === "", 1L).otherwise(0L)), lit(0L))
           .as("n_empty_unit")))
-    observed.orderBy("city", "location", "parameter", "value", "date")
+    // one partition, so the sort within it is a total order
+    observed.sortWithinPartitions("city", "location", "parameter", "value", "date")
   }
 
   /** K1 CSV sink (`main.py:284-293`): header row, the reference's fixed

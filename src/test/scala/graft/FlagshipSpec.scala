@@ -235,10 +235,15 @@ class FlagshipSpec extends SparkTestBase {
   }
 
   test("flagship plan: pruned snapshot scans, every join a broadcast") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
     import graft.sources.Snapshots
     import spark.implicits._
+    object aqe extends AdaptiveSparkPlanHelper
     // the REAL pipeline over the production source path — same build as
     // q_flagship (snapshot JSON through Snapshots.read*)
     val base = new java.io.File("fixtures/snapshots").getAbsolutePath
@@ -247,33 +252,88 @@ class FlagshipSpec extends SparkTestBase {
     val out = AirQuality.run(spark,
       Snapshots.readLocations(spark, s"$base/locations.jsonl"),
       Snapshots.readLatest(spark, s"$base/latest.jsonl"), cities)
-    // pre-AQE physical plan (no QueryStageExec wrapping): run() caches
-    // nothing, so the scans and every join sit in this one plan
-    val plans = out.queryExecution.sparkPlan.collect { case p => p }
-    // 1. Column pruning reaches both snapshot scans: the PERMISSIVE-mode
-    //    _corrupt_record column is dropped at the SCAN (requiredSchema), not
-    //    after it — at 100 TB that column is a second copy of every
-    //    malformed payload. explode(sensors) must not widen the scan back.
-    val scans = plans.collect { case f: FileSourceScanExec => f }
-    assert(scans.size >= 2, s"expected both snapshot scans, saw ${scans.size}")
+    // AQE's initial plan, before any action: the exchanges Spark inserts
+    // are in it and no stage has been re-optimized yet. `plans` leaves the
+    // cutoff subquery out, `withSubqueries` has it too.
+    val initial = out.queryExecution.executedPlan
+    val plans = aqe.collect(initial) { case p => p }
+    val withSubqueries = aqe.collectWithSubqueries(initial) { case p => p }
+    // 1. Column pruning reaches every snapshot scan, the cutoff
+    //    subquery's included: the PERMISSIVE-mode _corrupt_record column is
+    //    dropped at the SCAN (requiredSchema), not after it — at 100 TB that
+    //    column is a second copy of every malformed payload.
+    //    explode(sensors) must not widen the scan back.
+    val scans = withSubqueries.collect { case f: FileSourceScanExec => f }
+    assert(scans.size >= 3, s"expected all snapshot scans, saw ${scans.size}")
     scans.foreach { f =>
       assert(!f.requiredSchema.fieldNames.contains("_corrupt_record"),
         s"unpruned _corrupt_record in scan: ${f.requiredSchema.catalogString}")
     }
-    // 2. Every join in the flagship is a broadcast: the city config, the
-    //    candidate map, the candidate-sensor map and the one-row cutoff are
-    //    all bounded-small by construction. A SortMergeJoin or
-    //    ShuffledHashJoin here means something bounded stopped being
-    //    broadcast — the 100 TB measurement scan would shuffle.
-    val shuffledJoins = plans.collect {
+    // the main plan reads the locations file once; the cutoff subquery is
+    // its only other reader
+    val locationScans = plans.count {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.getName == "locations.jsonl")
+      case _ => false
+    }
+    assert(locationScans == 1, s"expected 1 locations scan, saw $locationScans")
+    // 2. Every join in the flagship is a broadcast: the city config and the
+    //    candidate-sensor map are bounded-small by construction. A
+    //    SortMergeJoin or ShuffledHashJoin here means something bounded
+    //    stopped being broadcast — the 100 TB measurement scan would
+    //    shuffle. The cutoff is a scalar subquery, not a nested-loop join.
+    val shuffledJoins = withSubqueries.collect {
       case j: SortMergeJoinExec => j.nodeName
       case j: ShuffledHashJoinExec => j.nodeName
     }
     assert(shuffledJoins.isEmpty,
       s"flagship plans a shuffled join: ${shuffledJoins.mkString(", ")}")
-    val bhj = plans.count(_.nodeName.contains("BroadcastHashJoin"))
-    assert(bhj >= 3,
-      s"expected >=3 broadcast hash joins (config, candidate map, candidate-sensor map), saw $bhj")
+    val bhj = plans.count(_.isInstanceOf[BroadcastHashJoinExec])
+    assert(bhj == 2,
+      s"expected 2 broadcast hash joins (config, candidate-sensor map), saw $bhj")
+    assert(!withSubqueries.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      "flagship plans a nested-loop join")
+    // 3. One exchange by city: the phase, station and rank windows share
+    //    it; the greedy walk and the final sort run in one partition, with
+    //    no range exchange (and so no sampling job) in front of the sort.
+    val exchanges = withSubqueries.collect { case e: ShuffleExchangeExec => e }
+    val ranged = exchanges.filter(_.outputPartitioning.isInstanceOf[RangePartitioning])
+    assert(ranged.isEmpty, s"flagship plans a range exchange: $ranged")
+    val hashed = exchanges.count(_.outputPartitioning.isInstanceOf[HashPartitioning])
+    assert(hashed == 1, s"expected 1 hashpartitioning exchange, saw $hashed")
+  }
+
+  test("O2 top-40 cap: distance ties in the fallback, loc_id ties in the primary") {
+    import spark.implicits._
+    // city F (10, 0) is fallback: 45 one-sensor stations 28-67 km out, the
+    // loc_id FALLING as the distance grows, plus the farthest station Twin
+    // with two pm25 sensors
+    val fb = (0 until 45).map(i => mkLoc("F", 1000L - i, s"F$i", 10.25 + 0.008 * i,
+      Seq(mkSensor(10000L + i, "pm25"))))
+    val twin = mkLoc("F", 2000L, "Twin", 10.64,
+      Seq(mkSensor(20001L, "pm25"), mkSensor(20002L, "pm25")))
+    // city P (0, 0) is primary: 45 one-sensor stations inside 22 km, the
+    // distance FALLING as the loc_id grows, plus the nearest station Dup,
+    // highest loc_id, that lists one sensor twice
+    val pr = (0 until 45).map(i => mkLoc("P", 3000L + i, s"P$i", 0.2 - 0.004 * i,
+      Seq(mkSensor(30000L + i, "pm25"))))
+    val dup = mkLoc("P", 3100L, "Dup", 0.001,
+      Seq(mkSensor(31000L, "pm25"), mkSensor(31000L, "pm25")))
+    val locs = fb ++ pr ++ Seq(twin, dup)
+    val meas = for (l <- locs; sid <- l.sensors.flatMap(_.id).distinct)
+      yield mkMeas(l.id, sid, "1.0")
+    // pm25 alone never covers every target, so the greedy walk keeps every
+    // candidate and the output holds exactly the top 40 per city
+    val got = AirQuality.run(spark, locs.toDS().toDF(), meas.toDS().toDF(),
+        Seq(City("F", 10.0, 0.0), City("P", 0.0, 0.0)).toDS().toDF())
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    // two matched sensors outrank one, then the 39 nearest: a loc_id
+    // tie-break would keep the farthest
+    assert(got.filter(_._1 == "F").map(_._2) ==
+      (0 until 39).map(i => s"F$i").toSet + "Twin")
+    // a sensor listed twice counts once, so Dup ties at one match and its
+    // loc_id ranks it 46th; the 40 lowest loc_ids stay, distance unused
+    assert(got.filter(_._1 == "P").map(_._2) == (0 until 40).map(i => s"P$i").toSet)
   }
 
   test("K1 CSV sink: BOM, header, fixed column order, lossless round-trip") {

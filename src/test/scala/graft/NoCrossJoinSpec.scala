@@ -74,7 +74,9 @@ class NoCrossJoinSpec extends SparkTestBase {
     "q_simhash_recall", // count frames + the PROBE-bounded truth kernel
     // (broadcast side = ProbeDocs=200 dense vectors — constant at any SF)
     // constant-size literal dims (the two reference cities):
-    "q_haversine", "q_haversine_filter", "q_flagship",
+    "q_haversine", "q_haversine_filter",
+    // (q_flagship left this list: its freshness cutoff is a scalar
+    // subquery, not a one-row frame cross-joined into the plan)
     // broadcast CONSTANT-size query/centroid side, streamed candidates —
     // O(Q·N)/O(N·nlist) by construction, never O(N²) (since round 6 the
     // recall queries' exact-truth sides use the fixed vec_id<20 sample too):
