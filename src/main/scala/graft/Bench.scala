@@ -37,15 +37,7 @@ object Bench {
     val wall0 = System.nanoTime()
     def wallSec: Double = (System.nanoTime() - wall0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts NANOS
-      .config("spark.sql.session.timeZone", "UTC") // events.ts NTZ→LTZ cast is exact under UTC
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // q_stream_* run the micro-batch streaming engine to completion; their
     // wall time is AvailableNow trigger/checkpoint scheduling, not data
     // throughput, so they are correctness-gated (Verify) but not timed.

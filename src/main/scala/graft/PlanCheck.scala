@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, RoundRobinPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -36,20 +35,12 @@ object PlanCheck extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
     val aqe = args.lift(1).contains("aqe")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static mode: with AQE on, codegen collapse (and final join
-      // strategy) happens per-stage at RUNTIME, so an unexecuted
-      // executedPlan reads zero codegen spans; the static audit documents
-      // the deterministic planner output, the aqe mode the runtime one
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
+    // static mode: with AQE on, codegen collapse (and final join
+    // strategy) happens per-stage at RUNTIME, so an unexecuted
+    // executedPlan reads zero codegen spans; the static audit documents
+    // the deterministic planner output, the aqe mode the runtime one
+    spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
 
     def shape(p: SparkPlan): Map[String, Int] = {
       def cnt(f: PartialFunction[SparkPlan, Unit]): Int =
@@ -117,12 +108,8 @@ object PlanCheck extends AdaptiveSparkPlanHelper {
       "codegen_spans_total" -> tot("codegen_spans")))
     val record =
       s"""{"sf":"$sf","aqe":$aqe,"summary":$summary,"queries":$qjson}"""
-    println(record)
-    val out = ToolPaths.resolve(
-      if (aqe) "tools/plancheck_aqe.json" else "tools/plancheck.json")
-    val w = new java.io.PrintWriter(out)
-    try w.println(record) finally w.close()
-    System.err.println(s"[plancheck] wrote $out")
+    ToolPaths.publish("plancheck",
+      if (aqe) "tools/plancheck_aqe.json" else "tools/plancheck.json", record)
     spark.stop()
   }
 }

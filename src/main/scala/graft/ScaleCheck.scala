@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility (not part of the library surface): measure per-query growth
   * of the heavy dedup/ANN/recall/analytics families across MULTIPLE scale
   * directories — the empirical check behind every "bounded at any corpus
@@ -26,11 +24,10 @@ import org.apache.spark.sql.SparkSession
   * the report records iterations and the PER-ITERATION ratio next to the
   * raw one.
   *
-  * Protocol (the graft.ProfX discipline — the one the judge's
-  * re-measurements rely on): one warm-up pass per query at sf0.001 to pay
-  * codegen/classload, then timed runs with the cache manager cleared
-  * between runs — min-of-3 at EVERY point (min, not mean: ambient load
-  * only ever ADDS time). Round 10 (VERDICT r9 ask #2) tightened the
+  * Protocol (the graft.Prof discipline): one warm-up pass per query at
+  * sf0.001 to pay codegen/classload, then timed runs with the cache manager
+  * cleared between runs — min-of-3 at EVERY point (min, not mean: ambient
+  * load only ever ADDS time). Round 10 (VERDICT r9 ask #2) tightened the
   * big-scale protocol from min-of-2 to min-of-3, INTERLEAVED the reps
   * (within a point the full query list runs once, then again — so an
   * ambient-load episode lands on one rep of MANY queries instead of every
@@ -220,15 +217,7 @@ object ScaleCheck {
       else Seq("tmp/sf1" -> 10.0, "tmp/sf3" -> 30.0)
     val warm = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     // Convergence-loop iteration capture: the listener fires async on the
     // shared bus after each action; readIters polls briefly for the value
@@ -450,7 +439,6 @@ object ScaleCheck {
     val record =
       s"""{"points":$pjson,"ratio_total":${f(sums.last / sums.head)},""" +
         s""""errors":$errs,"queries":$qjson}"""
-    println(record)
     // SPARK_GRAFT_SCALE_OUT: replicate runs write beside the primary
     // artifact (the two-same-code-runs discipline of rounds 10/11).
     // A FOCUSED run (SPARK_GRAFT_SCALE_QUERIES set) must never clobber
@@ -460,11 +448,8 @@ object ScaleCheck {
       if (sys.env.contains("SPARK_GRAFT_SCALE_QUERIES"))
         "tools/scalecheck_focused.json"
       else "tools/scalecheck.json"
-    val out = ToolPaths.resolve(
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", defaultOut))
-    val w = new java.io.PrintWriter(out)
-    try w.println(record) finally w.close()
-    System.err.println(s"[scalecheck] wrote $out")
+    ToolPaths.publish("scalecheck",
+      sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", defaultOut), record)
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dev utility (not part of the library surface): synthesize a larger scale
@@ -58,15 +58,7 @@ object ScaleGen {
     val src  = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out  = args.lift(1).getOrElse("tmp/sf1")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     def raw(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def stride(t: String, k: String): Long =

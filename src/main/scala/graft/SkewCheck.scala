@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev utility (not part of the library surface): MEASURE the salted join
@@ -25,19 +25,11 @@ object SkewCheck {
   def main(args: Array[String]): Unit = {
     val dir  = args.lift(0).getOrElse("tmp/sfskew10")
     val warm = args.lift(1).getOrElse("tmp/sfskew0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the point is the SHUFFLE-join skew story: keep the small dim from
-      // broadcasting (a broadcast join has no skewed reducer to salt)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+    // the point is the SHUFFLE-join skew story: keep the small dim from
+    // broadcasting (a broadcast join has no skewed reducer to salt)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
 
     def lineitem(d: String) =
       spark.read.parquet(s"$d/lineitem.parquet").select("l_suppkey", "l_quantity")
@@ -98,11 +90,7 @@ object SkewCheck {
         s""""salted_sec":${f(ts("salted").min)},""" +
         s""""salted_spread":${f(spread(ts("salted").toSeq))},""" +
         s""""salted_over_plain":${f(ts("salted").min / ts("plain").min)}}"""
-    println(record)
-    val out = ToolPaths.resolve("tools/skewcheck.json")
-    val w = new java.io.PrintWriter(out)
-    try w.println(record) finally w.close()
-    System.err.println(s"[skewcheck] wrote $out")
+    ToolPaths.publish("skewcheck", "tools/skewcheck.json", record)
     spark.stop()
   }
 }

@@ -25,15 +25,7 @@ object StreamCheck {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "tmp/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     // per-batch progress capture: (batchId, inputRows, procRows/s,
     // batchDurationMs, stateRows, stateBytes)
@@ -96,11 +88,7 @@ object StreamCheck {
     val record =
       s"""{"runs":${records.mkString("[", ",", "]")},""" +
         s""""recovery":$recovery,"tws_10m":$tws10mRec}"""
-    println(record)
-    val out = ToolPaths.resolve("tools/streamcheck.json")
-    val w = new java.io.PrintWriter(out)
-    try w.println(record) finally w.close()
-    System.err.println(s"[streamcheck] wrote $out")
+    ToolPaths.publish("streamcheck", "tools/streamcheck.json", record)
     spark.stop()
   }
 

@@ -14,4 +14,13 @@ object ToolPaths {
   def resolve(rel: String): String =
     if (new java.io.File(rel).isAbsolute) rel
     else new java.io.File(repoRoot, rel).getPath
+
+  /** Prints a main's one-line JSON record and writes it to `rel`. */
+  def publish(tag: String, rel: String, record: String): Unit = {
+    println(record)
+    val out = resolve(rel)
+    val w = new java.io.PrintWriter(out)
+    try w.println(record) finally w.close()
+    System.err.println(s"[$tag] wrote $out")
+  }
 }

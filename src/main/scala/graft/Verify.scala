@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,21 +13,13 @@ object Verify {
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts NANOS
-      .config("spark.ui.enabled", "false")
-      // SPARK_GRAFT_ANSI=true sweeps the whole surface under Spark-4 ANSI
-      // semantics (cast overflow / x÷0 / array-index THROW instead of
-      // null/wrap) — proves the exact-arithmetic discipline holds where
-      // SURVEY §5.3 only asserted it (tools/ansicheck.json, round 13)
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+    // SPARK_GRAFT_ANSI=true sweeps the whole surface under Spark-4 ANSI
+    // semantics (cast overflow / x÷0 / array-index THROW instead of
+    // null/wrap) — proves the exact-arithmetic discipline holds where
+    // SURVEY §5.3 only asserted it (tools/ansicheck.json, round 13)
+    spark.conf.set("spark.sql.ansi.enabled",
+      sys.env.getOrElse("SPARK_GRAFT_ANSI", "false"))
     new java.io.File(outDir).mkdirs()
     // Per-query failures are COLLECTED, not just logged: round 8 proved a
     // silent skip turns into a correctness artifact that omits the broken

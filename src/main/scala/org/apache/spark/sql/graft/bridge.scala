@@ -13,6 +13,11 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Block until every event posted to the session's listener bus (job,
+    * task, SQL execution, query listener callback) has been delivered. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Rebuild a (local)checkpointed DataFrame's `LogicalRDD` leaf WITHOUT
     * its origin statistics (and constraints), so downstream size
     * estimation starts from the conservative leaf default instead of the

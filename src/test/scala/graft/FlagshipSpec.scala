@@ -189,12 +189,12 @@ class FlagshipSpec extends SparkTestBase {
         executions.incrementAndGet()
     }
     val dir = java.nio.file.Files.createTempDirectory("flagship1x").toString
-    org.apache.spark.TestListenerBus.drain(spark)
+    org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
     spark.listenerManager.register(listener)
     try {
       val out = AirQuality.flagship(spark)
       AirQuality.writeCsv(out, dir)
-      org.apache.spark.TestListenerBus.drain(spark)
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
       // run() builds the plan without running a job; writeCsv's write is
       // the only execution, and nothing stays cached afterwards
       assert(executions.get == 1, s"expected 1 SQL execution, saw ${executions.get}")

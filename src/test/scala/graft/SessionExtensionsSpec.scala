@@ -17,7 +17,8 @@ class SessionExtensionsSpec extends SparkTestBase {
   /** A second session over the SAME SparkContext, with the extensions
     * installed. getOrCreate returns the default session no matter what the
     * builder carries, so the default/active slots are cleared first and
-    * restored afterwards.
+    * restored afterwards. The builder reuses the already-built context, so
+    * it names no master.
     */
   private def withExtendedSession(body: SparkSession => Unit): Unit = {
     val base = spark // force creation of the shared session first
@@ -25,8 +26,6 @@ class SessionExtensionsSpec extends SparkTestBase {
     SparkSession.clearActiveSession()
     try {
       val ext = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
         .withExtensions(new GraftExtensions().apply(_))
         .getOrCreate()

@@ -3,9 +3,9 @@ package org.apache.spark
 import org.apache.spark.sql.SparkSession
 
 /** Test access to the session's listener bus, which Spark keeps private:
-  * [[drain]] blocks until every posted event (job, SQL execution, query
-  * listener callback) has been delivered, so a test can count them.
+  * [[listeners]] counts the listeners registered on it, so a test can check
+  * that code which adds one also removes it.
   */
 object TestListenerBus {
-  def drain(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
+  def listeners(spark: SparkSession): Int = spark.sparkContext.listenerBus.listeners.size
 }

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Run a graft main class directly on the compiled classes (no sbt lock):
 #   bash tools/jrun.sh <MainClass> [args...]
-# Mirrors build.sbt's forked-run JVM options (JDK17 add-opens, UTC, no UI).
+# Mirrors build.sbt's forked-run JVM options (JDK17 add-opens, heap); the
+# session settings (UTC, no UI) come from graft.Session.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 OPENS=""
@@ -20,7 +21,6 @@ if [ -n "${SPARK_CODEGEN_FACTORY:-}" ]; then
   EXTRA="-Dspark.sql.codegen.factoryMode=${SPARK_CODEGEN_FACTORY}"
 fi
 exec java $OPENS $EXTRA \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
