@@ -19,10 +19,13 @@ package graft
   * (PageRank/BFS/k-means/BPE/label-prop clustering) run a DATA-DEPENDENT
   * number of rounds, so their wall-clock ratio confounds "more rounds at
   * larger N" (fine) with "costlier rounds" (a regression). Each loop's
-  * final plan carries an `observe("*_convergence", iterations…)` node that
-  * rides the measured action; a QueryExecutionListener captures it, and
-  * the report records iterations and the PER-ITERATION ratio next to the
-  * raw one.
+  * result plan carries a `<loop>_convergence` observation
+  * ([[graft.ops.Loop.report]]) that rides the measured action. The
+  * measured DataFrame's plan names the query's convergence observations,
+  * a QueryExecutionListener captures their `iterations`, and the report
+  * records iterations and the PER-ITERATION ratio next to the raw one. A
+  * query whose plan holds no convergence observation (no loop, or a
+  * component loop that took the driver path) records none.
   *
   * Protocol (the graft.Prof discipline): one warm-up pass per query at
   * sf0.001 to pay codegen/classload, then timed runs with the cache manager
@@ -198,15 +201,6 @@ object ScaleCheck {
     "q_mv_refresh_cdc" -> "1.0: one union + re-aggregate of base+delta retraction partials, O(base+delta) never O(history)",
     "q_triangles" -> "1.0: constant 60-node key space caps edges at C(60,2) regardless of N — growth is the scan + edge-distinct groupBy only; the two enumeration joins run on the bounded edge set")
 
-  /** query → its final-plan observe() node, for iteration capture. */
-  val LoopMetric: Map[String, String] = Map(
-    "q_pagerank" -> "pagerank_convergence",
-    "q_bfs" -> "bfs_convergence",
-    "q_kmeans" -> "kmeans_convergence",
-    "q_bpe" -> "bpe_convergence",
-    "q_dedup_clusters" -> "cc_convergence",
-    "q_dedup_cosine_clusters" -> "cc_convergence")
-
   def main(args: Array[String]): Unit = {
     val small = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val points: Seq[(String, Double)] =
@@ -220,8 +214,8 @@ object ScaleCheck {
     val spark = Session()
 
     // Convergence-loop iteration capture: the listener fires async on the
-    // shared bus after each action; readIters polls briefly for the value
-    // the measured action just produced.
+    // shared bus after each action; readIters polls briefly for the
+    // observations the measured plan declared.
     val seen = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     spark.listenerManager.register(
       new org.apache.spark.sql.util.QueryExecutionListener {
@@ -229,40 +223,42 @@ object ScaleCheck {
             qe: org.apache.spark.sql.execution.QueryExecution,
             durationNs: Long): Unit =
           qe.observedMetrics.foreach { case (name, row) =>
-            if (name.endsWith("_convergence")) {
-              val i = row.schema.fieldNames
-                .indexWhere(n => n == "iterations" || n == "merges")
-              if (i >= 0) seen.put(name, row.getLong(i))
-            }
+            if (name.endsWith("_convergence"))
+              seen.put(name, row.getAs[Long]("iterations"))
           }
         override def onFailure(fn: String,
             qe: org.apache.spark.sql.execution.QueryExecution,
             e: Exception): Unit = ()
       })
-    def readIters(name: String): Option[Long] =
-      LoopMetric.get(name).flatMap { m =>
-        var waited = 0
-        while (!seen.containsKey(m) && waited < 2000) {
-          Thread.sleep(50); waited += 50
-        }
-        Option(seen.remove(m))
+    // a query with several loops (q_dedup_chain) reports its longest
+    def readIters(names: Seq[String]): Option[Long] = {
+      var waited = 0
+      while (!names.forall(seen.containsKey) && waited < 2000) {
+        Thread.sleep(50); waited += 50
       }
+      names.flatMap(n => Option(seen.remove(n))).maxOption
+    }
 
     // same watchdog as Verify/Bench: at the ×30 point a pathological plan
     // could hang for hours — that must become a recorded failure for ONE
     // query, not a stalled report
     val timeoutSec =
       sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "1800").toLong
-    def once(name: String, dir: String): Double = {
+    // → (seconds, the measured plan's convergence observation names)
+    def once(name: String, dir: String): (Double, Seq[String]) = {
       val t0 = System.nanoTime()
       val r = Watchdog.run(spark, s"$name@$dir", timeoutSec) {
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
+        val df = SparkEntry.queries(name)(spark, dir)
+        df.write.format("noop").mode("overwrite").save()
+        df.queryExecution.logical.collect {
+          case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+              if c.name.endsWith("_convergence") => c.name
+        }
       }
       val t = (System.nanoTime() - t0) / 1e9
       spark.sharedState.cacheManager.clearCache()
       r match {
-        case Right(_) => t
+        case Right(loops) => (t, loops)
         case Left(msg) => throw new RuntimeException(s"$name@$dir: $msg")
       }
     }
@@ -302,10 +298,10 @@ object ScaleCheck {
       for (name <- heavy if !failed(name)) {
         seen.clear()
         try {
-          val t = once(name, dir)
+          val (t, loops) = once(name, dir)
           raw.getOrElseUpdate((name, pointIdx),
             scala.collection.mutable.ListBuffer[Double]()) += t
-          if (rep == 1) itersAt((name, pointIdx)) = readIters(name)
+          if (rep == 1) itersAt((name, pointIdx)) = readIters(loops)
         } catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[scalecheck] $name FAILED @$dir: " +
@@ -378,7 +374,7 @@ object ScaleCheck {
       val lastTwo = Seq(dirs.size - 2, dirs.size - 1)
       for (pi <- lastTwo; rep <- 1 to Reps; name <- overModel) {
         try {
-          val t = once(name, dirs(pi)._1)
+          val (t, _) = once(name, dirs(pi)._1)
           rerunTimes.getOrElseUpdate((name, pi),
             scala.collection.mutable.ListBuffer[Double]()) += t
         } catch {

@@ -41,10 +41,14 @@ object ConnectedComponents {
     *              the tuple array are live. A 10× limit needs ~2.5 GB of
     *              driver headroom; past that, let the distributed
     *              pointer-doubling fallback do its job instead.
+    * @param loop the loop's observation name ([[Loop]]): the calling
+    *              query's name, distinct per call when one query runs
+    *              two component loops into one plan.
     * @return (node, component) — component = min node id reachable.
     */
   def components(
       edges: DataFrame,
+      loop: String,
       maxIter: Int = 20,
       driverEdgeLimit: Long = 1000000L): DataFrame = {
     val spark = edges.sparkSession
@@ -63,7 +67,7 @@ object ConnectedComponents {
             probe.map(r => (r.getLong(0), r.getLong(1))))
         }
       }
-      distributedComponents(e0, maxIter)
+      distributedComponents(e0, loop, maxIter)
     } finally e0.unpersist()
   }
 
@@ -90,7 +94,8 @@ object ConnectedComponents {
     nodes.map(n => (n, find(n))).toSeq.toDF("node", "component")
   }
 
-  private def distributedComponents(edges: DataFrame, maxIter: Int): DataFrame = {
+  private def distributedComponents(edges: DataFrame, loop: String,
+      maxIter: Int): DataFrame = {
     val e = edges
     // symmetric closure once; reused by every round
     val sym = e.select(col("a").as("u"), col("b").as("v"))
@@ -100,21 +105,9 @@ object ConnectedComponents {
     // Iterative frames MUST truncate lineage each round: `labels` is
     // referenced four times per iteration, so the logical plan would grow
     // ~4× per round and analysis/printing blows up long before the data
-    // does. localCheckpoint (eager) materializes the partitions AND cuts
-    // the plan back to a leaf; on a production cluster with executor churn
-    // this becomes checkpoint() to reliable storage.
-    // dropOriginStats is NOT optional: localCheckpoint carries the
-    // pre-cut plan's size estimate across the cut, and the pointer-
-    // doubling self-join below SQUARES it every round — the estimate's
-    // BigInt digit count doubles per iteration and past ~16 rounds (deep
-    // diameters, exactly where doubling matters) Catalyst's stats visitor
-    // hangs multiplying million-digit integers (pinned by
-    // CcLongChainSpec). Resetting to the leaf default keeps every
-    // product 128-bit; AQE still re-plans from runtime sizes.
-    def cut(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.bridge.dropOriginStats(
-        df.localCheckpoint(true))
-    var labels = cut(sym.select(col("u").as("node")).distinct()
+    // does. Loop.carry materializes the partitions AND cuts the plan and
+    // its size estimate back to a leaf.
+    var labels = Loop.carry(sym.select(col("u").as("node")).distinct()
       .withColumn("lbl", col("node")))
     var converged = false
     var iter = 0
@@ -149,36 +142,24 @@ object ConnectedComponents {
           least(col("lbl"), coalesce(col("minNbr"), col("lbl")),
             coalesce(col("jump"), col("lbl"))).as("newLbl"),
           col("lbl").as("old"))
-        .observe(s"cc_chg_$iter",
-          coalesce(sum(when(col("newLbl") =!= col("old"), 1L)), lit(0L))
-            .as("n"))
-        .select(col("node"), col("newLbl").as("lbl"))
-      val next = cut(staged) // materialize AND cut lineage + stats
-      val changed = staged.queryExecution
-        .observedMetrics(s"cc_chg_$iter").getAs[Long]("n")
+      iter += 1
       // the previous round's checkpoint blocks are freed by the
       // ContextCleaner once the old frame becomes unreachable here
+      val (next, m) = Loop.round(loop, iter, staged,
+        col("node"), col("newLbl").as("lbl"))(
+        coalesce(sum(when(col("newLbl") =!= col("old"), 1L)), lit(0L))
+          .as("n"))
       labels = next
-      converged = changed == 0
-      lastChanged = changed
-      iter += 1
+      lastChanged = m.getAs[Long]("n")
+      converged = lastChanged == 0
     }
     sym.unpersist()
     if (!converged)
       System.err.println(s"[graft] ConnectedComponents: NOT converged " +
         s"after $maxIter rounds — labels are partially propagated")
-    // `labels` is already materialized (eager localCheckpoint); the final
+    // `labels` is already materialized (eager checkpoint); the final
     // projection reads those blocks, so nothing upstream is recomputed.
-    // Convergence is surfaced as DATA, not a log line: a CollectMetrics
-    // node rides the result plan (the K3 observe() discipline), so any
-    // consumer — and the equivalence spec's forced-distributed run — can
-    // read iterations/final_changed/converged after an action instead of
-    // trusting stderr silence. The loop counters are driver scalars at
-    // this point, so the literals are exact.
-    labels.select(col("node"), col("lbl").as("component"))
-      .observe("cc_convergence",
-        max(lit(iter)).cast("long").as("iterations"),
-        max(lit(lastChanged)).as("final_changed"),
-        max(lit(if (converged) 1L else 0L)).as("converged"))
+    Loop.report(labels.select(col("node"), col("lbl").as("component")),
+      loop, iter, lastChanged, converged)
   }
 }

@@ -228,8 +228,7 @@ object AirQuality {
     * the Hadoop FS API after the write. The in-memory rewrite is safe for the
     * same bounded-output reason the coalesce is — and that bound is now
     * ENFORCED, not assumed (VERDICT r14 #6): the rewrite refuses any part
-    * file over [[CsvBufferCap]] (default 64 MiB, overridable via the
-    * `graft.csv.buffer.cap.bytes` system property), so a future caller
+    * file over `cap` bytes (default 64 MiB), so a future caller
     * pointing this sink at a corpus-sized frame fails loudly at the size
     * check instead of buffering the corpus on the driver. The check runs
     * AFTER the coalesce(1) write (the part file's size is what's checked),
@@ -238,15 +237,7 @@ object AirQuality {
     * (ADVICE r15). A full-size export drops the coalesce+BOM and writes
     * partitioned.
     */
-  private[graft] def CsvBufferCap: Long =
-    sys.props.get("graft.csv.buffer.cap.bytes").map { s =>
-      try s.toLong
-      catch {
-        case _: NumberFormatException => sys.error(
-          s"graft.csv.buffer.cap.bytes is not a long: '$s'")
-      }
-    }.getOrElse(64L << 20)
-  def writeCsv(result: DataFrame, path: String): Unit = {
+  def writeCsv(result: DataFrame, path: String, cap: Long = 64L << 20): Unit = {
     result
       .select("city", "location", "parameter", "value", "unit", "date")
       .coalesce(1)
@@ -258,9 +249,9 @@ object AirQuality {
       .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".csv"))
       .getOrElse(sys.error(s"no CSV part file under $path"))
     val partLen = fs.getFileStatus(part).getLen
-    if (partLen > CsvBufferCap)
+    if (partLen > cap)
       sys.error(s"writeCsv: part file is $partLen bytes, over the " +
-        s"$CsvBufferCap-byte driver-buffer cap — this sink is for the " +
+        s"$cap-byte driver-buffer cap — this sink is for the " +
         "bounded flagship export; write a corpus-sized frame partitioned, " +
         "without the single-file BOM rewrite")
     val buf = new java.io.ByteArrayOutputStream()
@@ -293,7 +284,7 @@ object AirQuality {
     * Bounded-output contract (VERDICT r14 #6): this inherits [[writeCsv]]'s
     * whole-file driver buffering for the BOM rewrite, so it is for the
     * flagship-sized export (O(cities × stations × params) rows) ONLY —
-    * [[writeCsv]]'s [[CsvBufferCap]] guard fails loudly past 64 MiB rather
+    * [[writeCsv]]'s cap guard fails loudly past 64 MiB rather
     * than buffering a corpus on the driver.
     */
   def uploadCsv(result: DataFrame, destUri: String): Unit =

@@ -205,33 +205,12 @@ object Analytics {
         // re-joined every round (the reused-partitioning discipline)
         val edges = partGraphEdges(s, d).localCheckpoint()
         val outd = edges.groupBy("src").agg(count(lit(1)).as("od"))
-        // pre-partitioned on the per-round join key BEFORE the one-time
-        // checkpoint (LogicalRDD preserves outputPartitioning): every
-        // iteration's ranks⋈eo join reuses this layout, so only the small
-        // rank vector ever moves — the edge table shuffles ONCE per query,
+        // laid out on the per-round join key ONCE (Loop.edgeSide): every
+        // iteration's ranks⋈eo join reads it in place, so only the small
+        // rank vector ever moves — the edge table shuffles once per query,
         // not once per round, which is the property that matters when the
-        // edge table is the 100 TB side.
-        // Round 17: the checkpointed frame LOST this partitioning under
-        // AQE (JobsX measured the edge table re-shuffled EVERY round — one
-        // ~2.5 MB shuffle-write job per round at sf0.1, the exact failure
-        // this comment claims to avoid, silent until measured), so eo is
-        // now a CACHED relation instead: InMemoryRelation keeps its child
-        // plan's outputPartitioning/outputOrdering AND carries real size
-        // stats, so per-round plans read it in place (SMJ over the baked
-        // hash(src) + sort layout at scale, or a plan-time broadcast when
-        // it is small — both shuffle-free per round). The partition count
-        // is derived from the edge count (~2M rows ≈ tens of MB per
-        // partition), capped at the session's shuffle parallelism — a
-        // scale-adaptive value, not a local-mode constant; eo is
-        // loop-invariant so a cache (no lineage truncation) is safe here,
-        // unlike the loop-carried rank vector below.
-        val parts = s.sessionState.conf.numShufflePartitions
-        val ec = edges.count()
-        val eoParts = math.max(1L,
-          math.min(parts.toLong, ec >> 21)).toInt
-        val eo = edges.join(outd, "src")
-          .repartition(eoParts, col("src"))
-          .sortWithinPartitions("src").cache()
+        // edge table is the 100 TB side
+        val eo = graft.ops.Loop.edgeSide(edges, edges.join(outd, "src"))
         val nodes = edges.select(col("src").as("node"))
           .union(edges.select(col("dst").as("node"))).distinct()
           .localCheckpoint()
@@ -276,7 +255,8 @@ object Analytics {
           // round's dangling mass ride the checkpoint's execution as
           // CollectMetrics observations (the q_kmeans discipline) instead
           // of extra jobs per round. The prev column feeds ONLY the
-          // observation, so it is projected away before the checkpoint
+          // observation, so Loop.round projects it away before the
+          // checkpoint
           val staged = ranks.select(col("node"), col("rk").as("prev"),
               col("dg"))
             .join(contribs, col("node") === col("dst"), "left")
@@ -285,31 +265,20 @@ object Analytics {
               (lit(base) + expr("(85 * coalesce(s, 0)) div 100") +
                 expr(s"(85 * dmass) div (100 * $n)")).as("rk"),
               col("prev"), col("dg"))
-            .observe(s"pr_stats_$iters",
-              coalesce(max(abs(col("rk") - col("prev"))), lit(0L)).as("d"),
-              coalesce(sum(when(col("dg"), col("rk"))), lit(0L)).as("dm"))
-            .select("node", "rk", "dg")
-          // dropOriginStats: ranks' carried size estimate would otherwise
-          // square every round through the contribs join (digits double
-          // per iteration until the stats visitor dominates planning —
-          // the ConnectedComponents deep-loop lesson, see bridge.scala)
-          val next = org.apache.spark.sql.graft.bridge.dropOriginStats(
-            staged.localCheckpoint())
-          val m = staged.queryExecution.observedMetrics(s"pr_stats_$iters")
+          iters += 1
+          val (next, m) = graft.ops.Loop.round("q_pagerank", iters, staged,
+            col("node"), col("rk"), col("dg"))(
+            coalesce(max(abs(col("rk") - col("prev"))), lit(0L)).as("d"),
+            coalesce(sum(when(col("dg"), col("rk"))), lit(0L)).as("dm"))
           delta = m.getAs[Long]("d")
           dmass = m.getAs[Long]("dm")
           ranks = next
-          iters += 1
         }
-        ranks
+        graft.ops.Loop.report(ranks
           .select(col("node").as("partkey"), col("rk").as("rank_num"),
             round(col("rk") / lit(1.0e12), 9).as("rank"),
             lit(iters).cast("long").as("iters"))
-          .orderBy("partkey")
-          .observe("pagerank_convergence",
-            max(lit(iters)).cast("long").as("iterations"),
-            max(lit(delta)).as("final_delta"),
-            max(lit(if (delta <= thr) 1L else 0L)).as("converged"))
+          .orderBy("partkey"), "q_pagerank", iters, delta, delta <= thr)
     },
 
     // ── multi-source shortest paths (BFS distance-to-nearest-seed, the
@@ -359,19 +328,10 @@ object Analytics {
         |ORDER BY partkey""".stripMargin) {
       (s, d) =>
         val INF = 1000000000L
-        // same fix as q_pagerank (round 17): the checkpointed
-        // repartition(col) lost its partitioning under AQE (advisory →
-        // coalesced to 1 partition → the edge table re-shuffled every
-        // round), so the loop-invariant edge side is now a CACHED relation
-        // whose baked hash(src)+sort layout per-round plans read in place;
-        // partition count derived from the edge count, capped at the
-        // session's shuffle parallelism — scale-adaptive, not a constant
+        // the loop-invariant edge side is laid out on src once, as for
+        // q_pagerank (Loop.edgeSide)
         val edges0 = partGraphEdges(s, d).localCheckpoint()
-        val eParts = math.max(1L, math.min(
-          s.sessionState.conf.numShufflePartitions.toLong,
-          edges0.count() >> 21)).toInt
-        val edges = edges0.repartition(eParts, col("src"))
-          .sortWithinPartitions("src").cache()
+        val edges = graft.ops.Loop.edgeSide(edges0, edges0)
         val nodes = edges0.select(col("src").as("node"))
           .union(edges0.select(col("dst").as("node"))).distinct()
         var dist = nodes.select(col("node"),
@@ -383,33 +343,25 @@ object Analytics {
           val cand = dist.filter(col("dist") < INF)
             .join(edges, dist("node") === edges("src"))
             .groupBy("dst").agg((min(col("dist")) + 1L).as("md"))
-          // old feeds only the observation — project it away before the
-          // checkpoint (see q_pagerank)
+          // old feeds only the observation — Loop.round projects it away
+          // before the checkpoint (see q_pagerank)
           val staged = dist.select(col("node"), col("dist").as("old"))
             .join(cand, col("node") === col("dst"), "left")
             .select(col("node"),
               least(col("old"), coalesce(col("md"), lit(INF))).as("dist"),
               col("old"))
-            .observe(s"bfs_chg_$iters",
-              coalesce(sum(when(col("dist") =!= col("old"), 1L)), lit(0L))
-                .as("n"))
-            .select("node", "dist")
-          // dropOriginStats: same loop-carried stats compounding as
-          // q_pagerank (dist⋈cand squares the estimate per round)
-          val next = org.apache.spark.sql.graft.bridge.dropOriginStats(
-            staged.localCheckpoint())
-          changed = staged.queryExecution
-            .observedMetrics(s"bfs_chg_$iters").getAs[Long]("n")
-          dist = next
           iters += 1
+          val (next, m) = graft.ops.Loop.round("q_bfs", iters, staged,
+            col("node"), col("dist"))(
+            coalesce(sum(when(col("dist") =!= col("old"), 1L)), lit(0L))
+              .as("n"))
+          changed = m.getAs[Long]("n")
+          dist = next
         }
-        dist.filter(col("dist") < INF)
+        graft.ops.Loop.report(dist.filter(col("dist") < INF)
           .select(col("node").as("partkey"), col("dist"),
             lit(iters).cast("long").as("iters"))
-          .orderBy("partkey")
-          .observe("bfs_convergence",
-            max(lit(iters)).cast("long").as("iterations"),
-            max(lit(if (changed == 0L) 1L else 0L)).as("converged"))
+          .orderBy("partkey"), "q_bfs", iters, changed, changed == 0L)
     },
 
     // ── bigram language-model scoring: add-one-smoothed P(w2|w1) from
@@ -690,6 +642,7 @@ object Analytics {
           .localCheckpoint(eager = false)
         var iters = 0
         var done = false
+        var lastCount = 0L
         while (!done && iters < M) {
           // project the token array into a real column FIRST: referencing
           // the split(...) expression inside the transform lambda would
@@ -727,25 +680,24 @@ object Analytics {
                   org.apache.spark.sql.types.StringType),
                 org.apache.spark.sql.types.StructField("rep",
                   org.apache.spark.sql.types.StringType))))
-            // dropOriginStats: cur's carried estimate only grows linearly
-            // here (1-row param join, 10 rounds) but the loop-carried
-            // checkpoint discipline is uniform — see bridge.scala
-            cur = org.apache.spark.sql.graft.bridge.dropOriginStats(
-              cur.crossJoin(broadcast(param))
-                .select(col("doc_id"),
-                  call_function("replace", col("s"), col("pat"), col("rep"))
-                    .as("s"))
-                .localCheckpoint(eager = false))
+            // cur's carried estimate only grows linearly here (1-row param
+            // join, 10 rounds), but loop state is carried one way
+            cur = graft.ops.Loop.carry(cur.crossJoin(broadcast(param))
+              .select(col("doc_id"),
+                call_function("replace", col("s"), col("pat"), col("rep"))
+                  .as("s")), eager = false)
+            lastCount = top(0).getLong(2)
             iters += 1
           }
         }
-        cur.select(col("doc_id"),
+        // converged = no pair repeats any more; final_change = the last
+        // merged pair's count (0 when converged)
+        graft.ops.Loop.report(cur.select(col("doc_id"),
             size(split(collapsed(col("s")), " ")).cast("long").as("n_tok"),
             collapsed(col("s")).as("text"),
             lit(iters).cast("long").as("iters"))
-          .orderBy("doc_id")
-          .observe("bpe_convergence",
-            max(lit(iters)).cast("long").as("merges"))
+          .orderBy("doc_id"), "q_bpe", iters,
+          if (done) 0L else lastCount, done)
     },
 
     // ── BPE applied to HELD-OUT data (round 11): the other half of the
@@ -837,14 +789,10 @@ object Analytics {
                   org.apache.spark.sql.types.StringType),
                 org.apache.spark.sql.types.StructField("rep",
                   org.apache.spark.sql.types.StringType))))
-            // dropOriginStats: uniform loop-carried checkpoint discipline
-            // (see q_bpe above / bridge.scala)
-            cur = org.apache.spark.sql.graft.bridge.dropOriginStats(
-              cur.crossJoin(broadcast(param))
-                .select(col("doc_id"), col("n0"),
-                  call_function("replace", col("s"), col("pat"), col("rep"))
-                    .as("s"))
-                .localCheckpoint(eager = false))
+            cur = graft.ops.Loop.carry(cur.crossJoin(broadcast(param))
+              .select(col("doc_id"), col("n0"),
+                call_function("replace", col("s"), col("pat"), col("rep"))
+                  .as("s")), eager = false)
             iters += 1
           }
         }

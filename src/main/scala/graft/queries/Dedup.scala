@@ -247,7 +247,8 @@ object Dedup {
         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin) {
       (s, d) =>
         graft.ops.ConnectedComponents.components(
-          minhashPairs(s, d).select(col("doc_a").as("a"), col("doc_b").as("b")))
+          minhashPairs(s, d).select(col("doc_a").as("a"), col("doc_b").as("b")),
+          "q_dedup_clusters")
           .select(col("node").as("doc_id"), col("component"))
           .orderBy("doc_id")
     },
@@ -270,7 +271,8 @@ object Dedup {
         |ORDER BY doc_id""".stripMargin) {
       (s, d) =>
         val dupes = graft.ops.ConnectedComponents.components(
-          minhashPairs(s, d).select(col("doc_a").as("a"), col("doc_b").as("b")))
+          minhashPairs(s, d).select(col("doc_a").as("a"), col("doc_b").as("b")),
+          "q_dedup_keep")
           .filter(col("node") =!= col("component"))
           .select(col("node").as("doc_id"))
         // no broadcast hint: the duplicate set scales with the corpus's
@@ -366,7 +368,8 @@ object Dedup {
           .join(s1k.withColumnRenamed("doc_id", "doc_b"),
             Seq("doc_b"), "left_semi")
         val s2d = graft.ops.ConnectedComponents.components(
-          p2.select(col("doc_a").as("a"), col("doc_b").as("b")))
+          p2.select(col("doc_a").as("a"), col("doc_b").as("b")),
+          "q_dedup_chain_minhash")
           .filter(col("node") =!= col("component"))
           .select(col("node"), col("component")).cache()
         val s2k = s1k.join(s2d.select(col("node").as("doc_id")),
@@ -377,7 +380,8 @@ object Dedup {
           .join(s2k.withColumnRenamed("doc_id", "vec_b"),
             Seq("vec_b"), "left_semi")
         val s3d = graft.ops.ConnectedComponents.components(
-          cp2.select(col("vec_a").as("a"), col("vec_b").as("b")))
+          cp2.select(col("vec_a").as("a"), col("vec_b").as("b")),
+          "q_dedup_chain_cosine")
           .filter(col("node") =!= col("component"))
           .select(col("node"), col("component"))
         documents(s, d).select("doc_id")

@@ -637,211 +637,7 @@ object Similarity {
          |        > greatest(1, (SELECT count(DISTINCT vec_id) FROM xi) // 500))
          |SELECT vec_id, cid::BIGINT AS cid, it::BIGINT AS iters
          |FROM km WHERE it = (SELECT max(it) FROM km)
-         |ORDER BY vec_id""".stripMargin) {
-      (s, d) =>
-        val K = 4
-        // PACKED layout (round 16, guide §2.4 "remove shuffles outright"):
-        // one row per vector with the quantized coordinates as a single
-        // array<bigint> column, instead of the posexplode'd (vec_id, d, xi)
-        // rows the pre-r16 version carried. Every per-round operation then
-        // runs WITHOUT touching a per-vector shuffle:
-        //   - distances: a per-row HOF fold over zip_with(xs, cd_j) — no
-        //     join by d, no groupBy(vec_id) re-aggregation (the two
-        //     exchanges every round paid before);
-        //   - centroids: ONE global aggregate (K conditional VecSum element
-        //     sums + K counts) whose partial buffers are D longs per task —
-        //     the only exchange per round, carrying one buffer per task
-        //     instead of N·D posexplode rows;
-        //   - the previous-assignment compare: pcid is a COLUMN of the
-        //     loop-carried frame (vec_id, cid, xs), so no join at all.
-        // Arithmetic is exactly the old integer domain — Σ(xi−c)² per
-        // dimension in ascending-d order vs. any order is the same exact
-        // BIGINT (addition is order-free on exact integers), the centroid
-        // means are the same `div nullif(count,0)` truncating division —
-        // so the oracle SQL is untouched and the hash cannot move.
-        // Trade-off at 100 TB: the loop-carried checkpoint re-materializes
-        // N·(D+2) longs per round LOCALLY (sequential block-manager write,
-        // no network) where the old layout checkpointed N·2 but shuffled
-        // N rows twice per round — shuffle removal wins at every scale.
-        val packed = embeddings(s, d)
-          .select(col("vec_id"),
-            transform(col("embedding"),
-              x => floor(x.cast("double") * 1000000).cast("long")).as("xs"))
-          .localCheckpoint()
-        // exact squared distance: fold over the zipped (x, c) pairs; a NULL
-        // centroid array (emptied cluster / padded seed) nulls the whole
-        // fold, and least() below skips it — the old conditional-sum
-        // semantics verbatim. (The q_ann_pq element_at unroll was tried
-        // here in round 17 and measured a 2.5× REGRESSION — 4.4 → 11.2 s:
-        // at 64 dims × K=4 the unrolled tree is ~1500 nodes and the stage
-        // falls out of whole-stage codegen entirely, which is worse than
-        // an interpreted HOF inside a codegen'd stage. The unroll pays at
-        // 8 dims, not 64.)
-        def sqDist(xs: Column, cd: Column): Column =
-          aggregate(zip_with(xs, cd, (x, c) => (x - c) * (x - c)),
-            lit(0L), (acc, v) => acc + v)
-        // argmin over the K broadcast centroid arrays: min(dist·K + j) % K —
-        // the integer trick with its deterministic smallest-cid tie-break,
-        // unchanged from the pre-r16 version
-        def argminCid(xs: Column): Column =
-          (least((0 until K).map(j =>
-            sqDist(xs, col(s"cd$j")) * K + j): _*) % K).cast("int")
-        // kmeans++ seeding, deterministic: seed 0 is vec_id 0; seed j is
-        // the minimum vec_id whose CUMULATIVE min-squared-distance-to-
-        // chosen-seeds crosses the fixed quantile kmSeedFrac(j)/10⁹ of the
-        // total — exactly the kmeans++ D² distribution with the random
-        // draw pinned, so the oracle's p1/p2/p3 CTEs reproduce the chain
-        // integer-for-integer (measured at sf0.1: 24 Lloyd rounds with
-        // adjacent-id seeding → 17 with this). A chosen seed has D² = 0,
-        // so the crossing row always carries positive mass — re-picking a
-        // seed is impossible by construction, no exclusion list needed.
-        // The cumulative sum is TWO-PHASE (per-2²⁰-id-block partial sums,
-        // then a tiny block-offset window + per-block in-partition
-        // windows): no global single-partition window ever sees the
-        // per-vector rows, so the seeding pass stays shuffle-parallel at
-        // any corpus size. The crossing compare is done in doubles on both
-        // engines (identical IEEE ops on identical integers — bit-equal),
-        // because cum × 10⁹ would overflow BIGINT at corpus scale.
-        def pickByCum(dPrev: DataFrame, fracE9: Long): Option[Long] = {
-          val wIn = Window.partitionBy("b").orderBy("vec_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          val wPre = Window.orderBy("b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-          val bkt = dPrev.withColumn("b", shiftright(col("vec_id"), 20))
-          val boff = bkt.groupBy("b").agg(sum("dist").as("bs"))
-            .withColumn("off", coalesce(sum("bs").over(wPre), lit(0L)))
-            .select("b", "off")
-          val tot = dPrev.agg(sum("dist").as("tot"))
-          bkt.join(broadcast(boff), "b")
-            .withColumn("cum", col("off") + sum("dist").over(wIn))
-            .crossJoin(broadcast(tot))
-            .filter(col("cum").cast("double") >=
-              lit(fracE9).cast("double") * col("tot").cast("double") /
-                lit(1000000000.0))
-            .agg(min("vec_id")).collect().headOption
-            .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-        }
-        var seeds = Seq(0L)
-        var minDist: DataFrame = null
-        for (j <- 1 until K) {
-          // the chosen seed's vector rides a broadcast 1-row frame; the
-          // running min-distance carries (vec_id, xs, dist) so the next
-          // step needs NO join — least() against the incumbent column
-          val seedRow = packed.filter(col("vec_id") === seeds.last)
-            .select(col("xs").as("cxs"))
-          val dn = sqDist(col("xs"), col("cxs"))
-          val md = (if (minDist == null)
-            packed.crossJoin(broadcast(seedRow))
-              .select(col("vec_id"), col("xs"), dn.as("dist"))
-          else minDist.crossJoin(broadcast(seedRow))
-            .select(col("vec_id"), col("xs"),
-              least(col("dist"), dn).as("dist")))
-            .localCheckpoint() // reused by the next step's running min
-          pickByCum(md, kmSeedFrac(j)).foreach(v => seeds = seeds :+ v)
-          minDist = md
-        }
-        // pad with a match-nothing id if the corpus had < K candidates:
-        // the cd column goes all-NULL and least() skips it — the same
-        // emptied-cluster semantics as the loop body (and the oracle's
-        // empty p-CTEs)
-        val seedIds = seeds.padTo(K, -1L)
-        val seedCols = seedIds.zipWithIndex.map { case (v, j) =>
-          max(when(col("vec_id") === v, col("xs"))).as(s"cd$j") }
-        val cent0 = packed.filter(col("vec_id").isInCollection(seeds))
-          .agg(seedCols.head, seedCols.tail: _*)
-        // per-cluster element sums (VecSum — NULL over zero rows, exactly
-        // like sum(CASE WHEN ...)) + member counts. Round 17 (continued):
-        // these ride each round's ONE checkpoint job as CollectMetrics
-        // observations over the NEW assignment column, instead of a
-        // separate aggregate job (plus its broadcast exchange) at the top
-        // of the next round — the observed driver row (K bounded arrays of
-        // D longs + K counts) is injected back as a literal 1-row
-        // parameter relation, the q_bpe/q_pagerank discipline. The
-        // truncating per-dimension division stays IN the plan (meanCols is
-        // unchanged), and VecSum's exact integer sums are order-free, so
-        // the centroid arrays are value-identical to the old aggregate's.
-        def sumCols(cidCol: String) = (0 until K).flatMap(j => Seq(
-          graft.functions.VecSumAgg.vecSum(
-            when(col(cidCol) === j, col("xs")), Dims).as(s"s$j"),
-          count(when(col(cidCol) === j, lit(1))).as(s"n$j")))
-        val meanCols = (0 until K).map(j =>
-          expr(s"transform(s$j, x -> x div nullif(n$j, 0))").as(s"cd$j"))
-        val centSchema = org.apache.spark.sql.types.StructType(
-          (0 until K).flatMap(j => Seq(
-            org.apache.spark.sql.types.StructField(s"s$j",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.LongType)),
-            org.apache.spark.sql.types.StructField(s"n$j",
-              org.apache.spark.sql.types.LongType))))
-        def centParam(m: org.apache.spark.sql.Row): DataFrame =
-          s.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(
-            (0 until K).flatMap(j => Seq[Any](
-              m.getAs[scala.collection.Seq[Long]](s"s$j"),
-              m.getAs[Long](s"n$j"))): _*)), centSchema)
-        // the initial assignment's checkpoint job also carries the vector
-        // count (was a separate count() job) and round 1's centroid sums
-        val initObs = count(lit(1)).as("nv") +: sumCols("cid")
-        val assign0 = packed.crossJoin(broadcast(cent0))
-          .select(col("vec_id"), col("xs"), argminCid(col("xs")).as("cid"))
-          .observe("kmeans_cent_init", initObs.head, initObs.tail: _*)
-        var assign = assign0.localCheckpoint()
-        var centM = assign0.queryExecution.observedMetrics("kmeans_cent_init")
-        val nVecs = centM.getAs[Long]("nv")
-        val stableThr = math.max(1L, nVecs / 500L)
-        var iters = 0
-        var changed = Long.MaxValue
-        // Iteration cap (VERDICT r14 #8): "to convergence" holds where the
-        // stability criterion is reached inside maxRounds — at sf0.01 it
-        // converges in ~17 rounds, but the r13 scale artifact shows the cap
-        // BINDING at ≥×10 (iters [17, 50, 50, 50]). When it binds the
-        // result is still a valid total partition (the last assignment,
-        // exactly what a budgeted production k-means ships), and the cap is
-        // REPORTED, never silent: the kmeans_convergence observation
-        // carries converged=0 + final_changed, and every row's `iters`
-        // column equals the cap. The cap is a system property so the spec
-        // can force it to bind and assert the report (default 50).
-        val maxRounds =
-          sys.props.get("graft.kmeans.max.rounds").map(_.toInt).getOrElse(50)
-        while (changed > stableThr && iters < maxRounds) {
-          // one-row centroid frame rebuilt from the PREVIOUS checkpoint
-          // job's observed sums/counts — a LocalRelation broadcast (no
-          // task ever runs for it); the per-dimension truncating division
-          // is the same in-plan meanCols expression as always
-          val cent = centParam(centM).select(meanCols: _*)
-          // ONE action per round: the changed-count AND the next round's
-          // centroid sums (over ncid, the new assignment) ride the
-          // checkpoint's execution as CollectMetrics observations — no
-          // second job, no per-round aggregate exchange at all
-          val obs = coalesce(sum(when(col("ncid") =!= col("pcid"), 1L)),
-            lit(0L)).as("n") +: sumCols("ncid")
-          val staged = assign.crossJoin(broadcast(cent))
-            .select(col("vec_id"), col("xs"),
-              argminCid(col("xs")).as("ncid"), col("cid").as("pcid"))
-            .observe(s"kmeans_chg_$iters", obs.head, obs.tail: _*)
-            // pcid feeds only the observation — project it away before
-            // the checkpoint (CollectMetrics still executes below)
-            .select(col("vec_id"), col("ncid").as("cid"), col("xs"))
-          // dropOriginStats: the loop-carried frame's size estimate would
-          // otherwise compound through the assign⋈cent⋈assign round plan
-          // (digits grow per round until the stats visitor dominates —
-          // the ConnectedComponents deep-loop lesson, see bridge.scala)
-          val next = org.apache.spark.sql.graft.bridge.dropOriginStats(
-            staged.localCheckpoint())
-          val m = staged.queryExecution.observedMetrics(s"kmeans_chg_$iters")
-          changed = m.getAs[Long]("n")
-          centM = m
-          assign = next
-          iters += 1
-        }
-        assign
-          .select(col("vec_id"), col("cid").cast("long").as("cid"),
-            lit(iters).cast("long").as("iters"))
-          .orderBy("vec_id")
-          .observe("kmeans_convergence",
-            max(lit(iters)).cast("long").as("iterations"),
-            max(lit(changed)).as("final_changed"),
-            max(lit(if (changed <= stableThr) 1L else 0L)).as("converged"))
-    },
+         |ORDER BY vec_id""".stripMargin) { (s, d) => kmeans(s, d) },
 
     // ── ANN quality as a declared, hash-checked number: recall@3 of each
     //    approximate variant (single-bucket LSH, multi-probe LSH, IVF)
@@ -1623,7 +1419,8 @@ object Similarity {
          |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin) {
       (s, d) =>
         graft.ops.ConnectedComponents.components(
-          cosinePairs(s, d).select(col("vec_a").as("a"), col("vec_b").as("b")))
+          cosinePairs(s, d).select(col("vec_a").as("a"), col("vec_b").as("b")),
+          "q_dedup_cosine_clusters")
           .select(col("node").as("vec_id"), col("component"))
           .orderBy("vec_id")
     },
@@ -1647,7 +1444,8 @@ object Similarity {
          |ORDER BY vec_id""".stripMargin) {
       (s, d) =>
         val dupes = graft.ops.ConnectedComponents.components(
-          cosinePairs(s, d).select(col("vec_a").as("a"), col("vec_b").as("b")))
+          cosinePairs(s, d).select(col("vec_a").as("a"), col("vec_b").as("b")),
+          "q_dedup_cosine_keep")
           .filter(col("node") =!= col("component"))
           .select(col("node").as("vec_id"))
         // no broadcast hint: the duplicate set scales with the corpus's
@@ -1962,6 +1760,202 @@ object Similarity {
     //    corpus-independent. ──────────────────────────────────────────────
     Q("q_mmr", mmrOracleSql) { (s, d) => mmr(s, d) }
   )
+
+  /** q_kmeans: Lloyd's loop to assignment stability, capped at `maxRounds`
+    * rounds. A binding cap is reported in `q_kmeans_convergence`
+    * (converged = 0), never silent.
+    */
+  private[graft] def kmeans(s: SparkSession, d: String,
+      maxRounds: Int = 50): DataFrame = {
+    val K = 4
+    // PACKED layout (round 16, guide §2.4 "remove shuffles outright"):
+    // one row per vector with the quantized coordinates as a single
+    // array<bigint> column, instead of the posexplode'd (vec_id, d, xi)
+    // rows the pre-r16 version carried. Every per-round operation then
+    // runs WITHOUT touching a per-vector shuffle:
+    //   - distances: a per-row HOF fold over zip_with(xs, cd_j) — no
+    //     join by d, no groupBy(vec_id) re-aggregation (the two
+    //     exchanges every round paid before);
+    //   - centroids: ONE global aggregate (K conditional VecSum element
+    //     sums + K counts) whose partial buffers are D longs per task —
+    //     the only exchange per round, carrying one buffer per task
+    //     instead of N·D posexplode rows;
+    //   - the previous-assignment compare: pcid is a COLUMN of the
+    //     loop-carried frame (vec_id, cid, xs), so no join at all.
+    // Arithmetic is exactly the old integer domain — Σ(xi−c)² per
+    // dimension in ascending-d order vs. any order is the same exact
+    // BIGINT (addition is order-free on exact integers), the centroid
+    // means are the same `div nullif(count,0)` truncating division —
+    // so the oracle SQL is untouched and the hash cannot move.
+    // Trade-off at 100 TB: the loop-carried checkpoint re-materializes
+    // N·(D+2) longs per round LOCALLY (sequential block-manager write,
+    // no network) where the old layout checkpointed N·2 but shuffled
+    // N rows twice per round — shuffle removal wins at every scale.
+    val packed = embeddings(s, d)
+      .select(col("vec_id"),
+        transform(col("embedding"),
+          x => floor(x.cast("double") * 1000000).cast("long")).as("xs"))
+      .localCheckpoint()
+    // exact squared distance: fold over the zipped (x, c) pairs; a NULL
+    // centroid array (emptied cluster / padded seed) nulls the whole
+    // fold, and least() below skips it — the old conditional-sum
+    // semantics verbatim. (The q_ann_pq element_at unroll was tried
+    // here in round 17 and measured a 2.5× REGRESSION — 4.4 → 11.2 s:
+    // at 64 dims × K=4 the unrolled tree is ~1500 nodes and the stage
+    // falls out of whole-stage codegen entirely, which is worse than
+    // an interpreted HOF inside a codegen'd stage. The unroll pays at
+    // 8 dims, not 64.)
+    def sqDist(xs: Column, cd: Column): Column =
+      aggregate(zip_with(xs, cd, (x, c) => (x - c) * (x - c)),
+        lit(0L), (acc, v) => acc + v)
+    // argmin over the K broadcast centroid arrays: min(dist·K + j) % K —
+    // the integer trick with its deterministic smallest-cid tie-break,
+    // unchanged from the pre-r16 version
+    def argminCid(xs: Column): Column =
+      (least((0 until K).map(j =>
+        sqDist(xs, col(s"cd$j")) * K + j): _*) % K).cast("int")
+    // kmeans++ seeding, deterministic: seed 0 is vec_id 0; seed j is
+    // the minimum vec_id whose CUMULATIVE min-squared-distance-to-
+    // chosen-seeds crosses the fixed quantile kmSeedFrac(j)/10⁹ of the
+    // total — exactly the kmeans++ D² distribution with the random
+    // draw pinned, so the oracle's p1/p2/p3 CTEs reproduce the chain
+    // integer-for-integer (measured at sf0.1: 24 Lloyd rounds with
+    // adjacent-id seeding → 17 with this). A chosen seed has D² = 0,
+    // so the crossing row always carries positive mass — re-picking a
+    // seed is impossible by construction, no exclusion list needed.
+    // The cumulative sum is TWO-PHASE (per-2²⁰-id-block partial sums,
+    // then a tiny block-offset window + per-block in-partition
+    // windows): no global single-partition window ever sees the
+    // per-vector rows, so the seeding pass stays shuffle-parallel at
+    // any corpus size. The crossing compare is done in doubles on both
+    // engines (identical IEEE ops on identical integers — bit-equal),
+    // because cum × 10⁹ would overflow BIGINT at corpus scale.
+    def pickByCum(dPrev: DataFrame, fracE9: Long): Option[Long] = {
+      val wIn = Window.partitionBy("b").orderBy("vec_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val wPre = Window.orderBy("b")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val bkt = dPrev.withColumn("b", shiftright(col("vec_id"), 20))
+      val boff = bkt.groupBy("b").agg(sum("dist").as("bs"))
+        .withColumn("off", coalesce(sum("bs").over(wPre), lit(0L)))
+        .select("b", "off")
+      val tot = dPrev.agg(sum("dist").as("tot"))
+      bkt.join(broadcast(boff), "b")
+        .withColumn("cum", col("off") + sum("dist").over(wIn))
+        .crossJoin(broadcast(tot))
+        .filter(col("cum").cast("double") >=
+          lit(fracE9).cast("double") * col("tot").cast("double") /
+            lit(1000000000.0))
+        .agg(min("vec_id")).collect().headOption
+        .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    }
+    var seeds = Seq(0L)
+    var minDist: DataFrame = null
+    for (j <- 1 until K) {
+      // the chosen seed's vector rides a broadcast 1-row frame; the
+      // running min-distance carries (vec_id, xs, dist) so the next
+      // step needs NO join — least() against the incumbent column
+      val seedRow = packed.filter(col("vec_id") === seeds.last)
+        .select(col("xs").as("cxs"))
+      val dn = sqDist(col("xs"), col("cxs"))
+      val md = (if (minDist == null)
+        packed.crossJoin(broadcast(seedRow))
+          .select(col("vec_id"), col("xs"), dn.as("dist"))
+      else minDist.crossJoin(broadcast(seedRow))
+        .select(col("vec_id"), col("xs"),
+          least(col("dist"), dn).as("dist")))
+        .localCheckpoint() // reused by the next step's running min
+      pickByCum(md, kmSeedFrac(j)).foreach(v => seeds = seeds :+ v)
+      minDist = md
+    }
+    // pad with a match-nothing id if the corpus had < K candidates:
+    // the cd column goes all-NULL and least() skips it — the same
+    // emptied-cluster semantics as the loop body (and the oracle's
+    // empty p-CTEs)
+    val seedIds = seeds.padTo(K, -1L)
+    val seedCols = seedIds.zipWithIndex.map { case (v, j) =>
+      max(when(col("vec_id") === v, col("xs"))).as(s"cd$j") }
+    val cent0 = packed.filter(col("vec_id").isInCollection(seeds))
+      .agg(seedCols.head, seedCols.tail: _*)
+    // per-cluster element sums (VecSum — NULL over zero rows, exactly
+    // like sum(CASE WHEN ...)) + member counts. Round 17 (continued):
+    // these ride each round's ONE checkpoint job as CollectMetrics
+    // observations over the NEW assignment column, instead of a
+    // separate aggregate job (plus its broadcast exchange) at the top
+    // of the next round — the observed driver row (K bounded arrays of
+    // D longs + K counts) is injected back as a literal 1-row
+    // parameter relation, the q_bpe/q_pagerank discipline. The
+    // truncating per-dimension division stays IN the plan (meanCols is
+    // unchanged), and VecSum's exact integer sums are order-free, so
+    // the centroid arrays are value-identical to the old aggregate's.
+    def sumCols(cidCol: String) = (0 until K).flatMap(j => Seq(
+      graft.functions.VecSumAgg.vecSum(
+        when(col(cidCol) === j, col("xs")), Dims).as(s"s$j"),
+      count(when(col(cidCol) === j, lit(1))).as(s"n$j")))
+    val meanCols = (0 until K).map(j =>
+      expr(s"transform(s$j, x -> x div nullif(n$j, 0))").as(s"cd$j"))
+    val centSchema = org.apache.spark.sql.types.StructType(
+      (0 until K).flatMap(j => Seq(
+        org.apache.spark.sql.types.StructField(s"s$j",
+          org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.LongType)),
+        org.apache.spark.sql.types.StructField(s"n$j",
+          org.apache.spark.sql.types.LongType))))
+    def centParam(m: org.apache.spark.sql.Row): DataFrame =
+      s.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(
+        (0 until K).flatMap(j => Seq[Any](
+          m.getAs[scala.collection.Seq[Long]](s"s$j"),
+          m.getAs[Long](s"n$j"))): _*)), centSchema)
+    // the initial assignment's checkpoint job also carries the vector
+    // count (was a separate count() job) and round 1's centroid sums
+    val initObs = count(lit(1)).as("nv") +: sumCols("cid")
+    val assign0 = packed.crossJoin(broadcast(cent0))
+      .select(col("vec_id"), col("xs"), argminCid(col("xs")).as("cid"))
+      .observe("q_kmeans_round_0", initObs.head, initObs.tail: _*)
+    var assign = assign0.localCheckpoint()
+    var centM = assign0.queryExecution.observedMetrics("q_kmeans_round_0")
+    val nVecs = centM.getAs[Long]("nv")
+    val stableThr = math.max(1L, nVecs / 500L)
+    var iters = 0
+    var changed = Long.MaxValue
+    // Iteration cap (VERDICT r14 #8): "to convergence" holds where the
+    // stability criterion is reached inside maxRounds — at sf0.01 it
+    // converges in ~17 rounds, but the r13 scale artifact shows the cap
+    // BINDING at ≥×10 (iters [17, 50, 50, 50]). When it binds the
+    // result is still a valid total partition (the last assignment,
+    // exactly what a budgeted production k-means ships), and the cap is
+    // REPORTED, never silent: the q_kmeans_convergence observation
+    // carries converged=0 + final_change, and every row's `iters`
+    // column equals the cap.
+    while (changed > stableThr && iters < maxRounds) {
+      // one-row centroid frame rebuilt from the PREVIOUS checkpoint
+      // job's observed sums/counts — a LocalRelation broadcast (no
+      // task ever runs for it); the per-dimension truncating division
+      // is the same in-plan meanCols expression as always
+      val cent = centParam(centM).select(meanCols: _*)
+      // ONE action per round: the changed-count AND the next round's
+      // centroid sums (over ncid, the new assignment) ride the
+      // checkpoint's execution as CollectMetrics observations — no
+      // second job, no per-round aggregate exchange at all. pcid feeds
+      // only the observation; Loop.round projects it away before the
+      // checkpoint
+      val staged = assign.crossJoin(broadcast(cent))
+        .select(col("vec_id"), col("xs"),
+          argminCid(col("xs")).as("ncid"), col("cid").as("pcid"))
+      iters += 1
+      val (next, m) = graft.ops.Loop.round("q_kmeans", iters, staged,
+        col("vec_id"), col("ncid").as("cid"), col("xs"))(
+        coalesce(sum(when(col("ncid") =!= col("pcid"), 1L)),
+          lit(0L)).as("n") +: sumCols("ncid"): _*)
+      changed = m.getAs[Long]("n")
+      centM = m
+      assign = next
+    }
+    graft.ops.Loop.report(assign
+      .select(col("vec_id"), col("cid").cast("long").as("cid"),
+        lit(iters).cast("long").as("iters"))
+      .orderBy("vec_id"), "q_kmeans", iters, changed, changed <= stableThr)
+  }
 
   /** Unrolled greedy-MMR oracle: r20 = exact top-20 per probe, ps = the
     * candidate-pair cosine matrix, then one (p_i, sc_i, s_i) CTE triple

@@ -21,21 +21,8 @@ object bridge {
   /** Rebuild a (local)checkpointed DataFrame's `LogicalRDD` leaf WITHOUT
     * its origin statistics (and constraints), so downstream size
     * estimation starts from the conservative leaf default instead of the
-    * pre-checkpoint plan's estimate.
-    *
-    * Why this must exist: `localCheckpoint` truncates lineage but
-    * deliberately carries the original plan's `Statistics` across the cut.
-    * In an ITERATIVE self-join loop (pointer doubling in
-    * ConnectedComponents) the carried sizeInBytes is itself the product
-    * of the previous round's estimates, so the BigInt squares every
-    * round — digits double per iteration, and by round ~20 Catalyst's
-    * SizeInBytesOnlyStatsPlanVisitor spends unbounded CPU multiplying
-    * million-digit integers (observed: a 10⁴-diameter chain fixture hung
-    * the planner after ~16 rounds at ~25 min and counting). Dropping the
-    * origin stats resets the estimate to a constant each round: products
-    * stay 128-bit, planning stays O(plan), and the conservative default
-    * (never broadcast a checkpointed label frame) is exactly the safe
-    * choice for loop state anyway — AQE re-plans from RUNTIME sizes.
+    * pre-checkpoint plan's estimate. Why loop state needs this:
+    * `graft.ops.Loop.carry`, its one caller.
     *
     * No-op for frames whose analyzed plan isn't a bare LogicalRDD.
     */

@@ -98,9 +98,9 @@ class AnalyticsSpec extends SparkTestBase {
       assert(rank > 0.0 && rank < 1.0)
     }
     // ...and as a CollectMetrics observation (the K3 discipline)
-    val obs = df.queryExecution.observedMetrics.get("pagerank_convergence")
+    val obs = df.queryExecution.observedMetrics.get("q_pagerank_convergence")
     assert(obs.exists(_.getAs[Long]("converged") == 1L),
-      s"pagerank_convergence observation missing or not converged: $obs")
+      s"q_pagerank_convergence observation missing or not converged: $obs")
   }
 
   test("q_bfs: seeds at 0, fixed point admits no further relaxation") {
@@ -133,9 +133,9 @@ class AnalyticsSpec extends SparkTestBase {
         assert(dv <= du + 1L, s"edge $u→$v relaxable: $du + 1 < $dv")
       }
     }
-    val obs = df.queryExecution.observedMetrics.get("bfs_convergence")
+    val obs = df.queryExecution.observedMetrics.get("q_bfs_convergence")
     assert(obs.exists(_.getAs[Long]("converged") == 1L),
-      s"bfs_convergence observation missing or not converged: $obs")
+      s"q_bfs_convergence observation missing or not converged: $obs")
   }
 
   test("q_bpe: merges are lossless joins of adjacent original words") {
@@ -162,8 +162,8 @@ class AnalyticsSpec extends SparkTestBase {
     val nTok = rows.map(_.getAs[Long]("n_tok")).sum
     val nOrig = orig.valuesIterator.map(_.split(" ").length.toLong).sum
     assert(nTok < nOrig, s"no shrink: $nTok vs $nOrig")
-    val obs = df.queryExecution.observedMetrics.get("bpe_convergence")
-    assert(obs.exists(_.getAs[Long]("merges") == 10L))
+    val obs = df.queryExecution.observedMetrics.get("q_bpe_convergence")
+    assert(obs.exists(_.getAs[Long]("iterations") == 10L))
   }
 
   test("q_bpe_heldout matches a sequential driver-side train/apply BPE") {

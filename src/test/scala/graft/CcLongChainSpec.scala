@@ -22,15 +22,15 @@ class CcLongChainSpec extends SparkTestBase {
     // driverEdgeLimit=0 forces the distributed loop (the 10^4 edges would
     // otherwise take the bounded union-find shortcut)
     val res = graft.ops.ConnectedComponents
-      .components(edges, maxIter = 25, driverEdgeLimit = 0)
+      .components(edges, "cc_long_chain", maxIter = 25, driverEdgeLimit = 0)
     val rows = res.collect()
     assert(rows.length === (n + 1))
     assert(rows.forall(_.getLong(1) == 0L),
       "every chain node must resolve to component 0")
     // convergence facts ride the plan as data (the K3 observe discipline)
-    val m = res.queryExecution.observedMetrics("cc_convergence")
+    val m = res.queryExecution.observedMetrics("cc_long_chain_convergence")
     assert(m.getAs[Long]("converged") === 1L)
-    assert(m.getAs[Long]("final_changed") === 0L)
+    assert(m.getAs[Long]("final_change") === 0L)
     val iters = m.getAs[Long]("iterations")
     // label coverage doubles per round (jump uses the previous round's
     // labels on both sides: f(r) = 2·f(r−1), f(1) = 1), so a 10^4 chain

@@ -191,10 +191,10 @@ class ExtensionsSpec extends SparkTestBase {
       Seq((200L, 300L), (300L, 400L), (400L, 500L), (500L, 200L)) ++ // cycle
       Seq((7L, 400L))                                            // bridge
     ).toDF("a", "b")
-    val driver = graft.ops.ConnectedComponents.components(edges)
+    val driver = graft.ops.ConnectedComponents.components(edges, "cc_spec")
       .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
     val distDf = graft.ops.ConnectedComponents
-      .components(edges, driverEdgeLimit = 0)
+      .components(edges, "cc_spec", driverEdgeLimit = 0)
       .orderBy("node")
     val dist = distDf.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(driver.nonEmpty)
@@ -206,10 +206,10 @@ class ExtensionsSpec extends SparkTestBase {
     // data, not stderr silence: the loop must have CONVERGED (a final round
     // that changed nothing), in more than zero rounds, within the default
     // iteration budget
-    val obs = distDf.queryExecution.observedMetrics("cc_convergence")
+    val obs = distDf.queryExecution.observedMetrics("cc_spec_convergence")
     assert(obs.getAs[Long]("converged") == 1L,
       s"distributed CC did not converge: $obs")
-    assert(obs.getAs[Long]("final_changed") == 0L)
+    assert(obs.getAs[Long]("final_change") == 0L)
     assert(obs.getAs[Long]("iterations") > 0L &&
       obs.getAs[Long]("iterations") < 20L)
   }
@@ -261,9 +261,9 @@ class ExtensionsSpec extends SparkTestBase {
     val iters = rows.map(_.getAs[Long]("iters")).distinct
     assert(iters.length == 1 && iters.head >= 1L && iters.head < 50L,
       s"suspicious iteration count: ${iters.toSeq}")
-    val obs = df.queryExecution.observedMetrics.get("kmeans_convergence")
+    val obs = df.queryExecution.observedMetrics.get("q_kmeans_convergence")
     assert(obs.exists(_.getAs[Long]("converged") == 1L),
-      s"kmeans_convergence observation missing or not converged: $obs")
+      s"q_kmeans_convergence observation missing or not converged: $obs")
     // deterministic end-to-end: exact-integer distances + the cid-indexed
     // argmin tie-break leave no float or ordering slack between runs
     val again = run("q_kmeans").collect()
@@ -278,38 +278,35 @@ class ExtensionsSpec extends SparkTestBase {
     // cap to bind here (1 round can't stabilize this data) and assert the
     // contract: the result is still a valid total partition (the last
     // assignment), and the cap is REPORTED — converged=0 in the
-    // kmeans_convergence observation, iters = cap on every row.
-    sys.props("graft.kmeans.max.rounds") = "1"
-    try {
-      val df = run("q_kmeans")
-      val rows = df.collect()
-      val n = graft.model.Tables.embeddings(spark, sfDir).count()
-      assert(rows.length.toLong == n)
-      assert(rows.forall { r =>
-        val c = r.getAs[Long]("cid"); c >= 0L && c < 4L
-      })
-      assert(rows.forall(_.getAs[Long]("iters") == 1L))
-      val obs = df.queryExecution.observedMetrics.get("kmeans_convergence")
-      assert(obs.isDefined, "kmeans_convergence observation missing")
-      assert(obs.get.getAs[Long]("iterations") == 1L)
-      // The contract under test is "a binding cap is reported, not
-      // silent" — keyed off final_changed, not an assumption about the
-      // data (ADVICE r15: asserting converged=0 unconditionally would
-      // break with a confusing message if a regenerated sf0.001 happened
-      // to stabilize in one round from the k-means++ seeding). changed>0
-      // means the cap bound → converged must read 0; changed==0 means the
-      // data genuinely converged in round 1 → converged must read 1.
-      val changed = obs.get.getAs[Long]("final_changed")
-      val converged = obs.get.getAs[Long]("converged")
-      if (changed > 0L)
-        assert(converged == 0L,
-          s"cap bound (final_changed=$changed) but converged=$converged: $obs")
-      else {
-        info(s"sf0.001 data converged within the 1-round cap; " +
-          "cap-binding branch not exercised this run")
-        assert(converged == 1L,
-          s"stable run (final_changed=0) must report converged=1: $obs")
-      }
-    } finally sys.props.remove("graft.kmeans.max.rounds")
+    // q_kmeans_convergence observation, iters = cap on every row.
+    val df = graft.queries.Similarity.kmeans(spark, sfDir, maxRounds = 1)
+    val rows = df.collect()
+    val n = graft.model.Tables.embeddings(spark, sfDir).count()
+    assert(rows.length.toLong == n)
+    assert(rows.forall { r =>
+      val c = r.getAs[Long]("cid"); c >= 0L && c < 4L
+    })
+    assert(rows.forall(_.getAs[Long]("iters") == 1L))
+    val obs = df.queryExecution.observedMetrics.get("q_kmeans_convergence")
+    assert(obs.isDefined, "q_kmeans_convergence observation missing")
+    assert(obs.get.getAs[Long]("iterations") == 1L)
+    // The contract under test is "a binding cap is reported, not
+    // silent" — keyed off final_change, not an assumption about the
+    // data (ADVICE r15: asserting converged=0 unconditionally would
+    // break with a confusing message if a regenerated sf0.001 happened
+    // to stabilize in one round from the k-means++ seeding). changed>0
+    // means the cap bound → converged must read 0; changed==0 means the
+    // data genuinely converged in round 1 → converged must read 1.
+    val changed = obs.get.getAs[Long]("final_change")
+    val converged = obs.get.getAs[Long]("converged")
+    if (changed > 0L)
+      assert(converged == 0L,
+        s"cap bound (final_change=$changed) but converged=$converged: $obs")
+    else {
+      info(s"sf0.001 data converged within the 1-round cap; " +
+        "cap-binding branch not exercised this run")
+      assert(converged == 1L,
+        s"stable run (final_change=0) must report converged=1: $obs")
+    }
   }
 }

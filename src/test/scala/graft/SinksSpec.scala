@@ -125,13 +125,10 @@ class SinksSpec extends SparkTestBase {
     // driver — safe only under the flagship's bounded-output contract, and
     // now guarded: over the cap the sink fails loudly BEFORE buffering.
     val result = graft.pipeline.AirQuality.flagship(spark)
-    sys.props("graft.csv.buffer.cap.bytes") = "16"
-    try {
-      val e = intercept[RuntimeException] {
-        graft.pipeline.AirQuality.writeCsv(result, tmp("graft-csv-cap"))
-      }
-      assert(e.getMessage.contains("driver-buffer cap"))
-    } finally sys.props.remove("graft.csv.buffer.cap.bytes")
+    val e = intercept[RuntimeException] {
+      graft.pipeline.AirQuality.writeCsv(result, tmp("graft-csv-cap"), cap = 16)
+    }
+    assert(e.getMessage.contains("driver-buffer cap"))
     // under the default cap the same frame writes fine (BOM intact)
     val dir = tmp("graft-csv-ok")
     graft.pipeline.AirQuality.writeCsv(result, dir)
