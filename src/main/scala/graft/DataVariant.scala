@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.model.Tables
+
 /** Dev utility (not part of the library surface): derive a DIFFERENT data
   * distribution from an existing testdata directory, so the verify gate can
   * prove the engine's adaptive thresholds (SetSimilarity's banding ladder,
@@ -58,7 +60,7 @@ object DataVariant {
     require(mode == "seed" || mode == "skew", s"mode must be seed|skew: $mode")
     val spark = Session()
 
-    def raw(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def raw(t: String): DataFrame = Tables.table(spark, src, t)
     def write(df: DataFrame, t: String): Unit = {
       df.write.mode("overwrite").parquet(s"$out/$t.parquet")
       System.err.println(s"[datavariant:$mode] wrote $t")

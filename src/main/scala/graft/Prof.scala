@@ -4,15 +4,16 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.bridge
 
 /** Debug main: `bash tools/jrun.sh graft.Prof q_a [q_b ...]` profiles each
   * query at `SPARK_GRAFT_SF_DIR` (default sf0.1): the min of 5 timed
   * `count()` passes after one warm run at sf0.001, then for the last pass a
-  * per-job table (wall, tasks, task time, CPU, GC, shuffle bytes; the gap
-  * between the job walls and the pass is driver-side work) and the final
-  * post-AQE plan it executed, formatted.
+  * per-job table (SQL execution, wall, tasks, task time, CPU, GC, shuffle
+  * bytes; the gap between the job walls and the pass is driver-side work)
+  * and the final post-AQE plan it executed, formatted.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
@@ -23,7 +24,8 @@ object Prof {
     finally spark.stop()
   }
 
-  private class Job(val id: Int, val desc: String, val start: Long, val stages: Int) {
+  private class Job(val id: Int, val exec: String, val desc: String, val start: Long,
+      val stages: Int) {
     var end, taskMs, cpuNs, gcMs, shufR, shufW = 0L
     var tasks = 0
     def wallMs: Long = (end - start).max(0L)
@@ -47,14 +49,23 @@ object Prof {
 
     val jobs = mutable.LinkedHashMap.empty[Int, Job]
     val stageJob = mutable.HashMap.empty[Int, Job]
+    val execDesc = mutable.HashMap.empty[String, String]
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execDesc(s.executionId.toString) = s.description
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        // queries set no job descriptions; the result stage's callsite at
-        // least tells checkpoint, collect and broadcast-build jobs apart
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        // Queries set no job descriptions. A job run for a SQL execution
+        // takes the execution's (its action's callsite): the jobs AQE submits
+        // carry only Spark's own callsite. Other jobs keep the result
+        // stage's callsite.
+        val exec = prop(SQLExecution.EXECUTION_ID_KEY)
+        val desc = prop("spark.job.description")
+          .orElse(exec.flatMap(execDesc.get))
           .orElse(e.stageInfos.lastOption.map(_.name)).getOrElse("")
-        val j = new Job(e.jobId, desc, e.time, e.stageIds.size)
+        val j = new Job(e.jobId, exec.getOrElse("-"), desc, e.time, e.stageIds.size)
         jobs(e.jobId) = j
         e.stageIds.foreach(stageJob(_) = j)
       }
@@ -93,7 +104,7 @@ object Prof {
     }
 
     val table = jobs.values.map(j =>
-      f"  job ${j.id}%4d  wall=${j.wallMs / 1e3}%7.3f  stages=${j.stages}%2d" +
+      f"  job ${j.id}%4d  exec=${j.exec}%4s  wall=${j.wallMs / 1e3}%7.3f  stages=${j.stages}%2d" +
         f"  tasks=${j.tasks}%4d  taskTime=${j.taskMs / 1e3}%8.3f  cpu=${j.cpuNs / 1e9}%7.3f" +
         f"  gc=${j.gcMs / 1e3}%6.3f  shufR=${j.shufR / 1024}%6dK  shufW=${j.shufW / 1024}%6dK" +
         s"  ${j.desc.take(60)}")

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.model.Tables
+
 /** Dev utility (not part of the library surface): synthesize a larger scale
   * factor from an existing testdata directory by REPLICATION with
   * foreign-key-consistent key offsets, so the scale story (VERDICT r6 next
@@ -60,7 +62,7 @@ object ScaleGen {
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
     val spark = Session()
 
-    def raw(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def raw(t: String): DataFrame = Tables.table(spark, src, t)
     def stride(t: String, k: String): Long =
       raw(t).agg(max(col(k))).head().getLong(0) + 1L
     // replicate each row `reps` times, tagged with its replica index

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.model.Tables
+
 /** Dev utility (not part of the library surface): MEASURE the salted join
   * against the plain equi-join on data that actually has a hot key
   * (VERDICT r12 ask #4 — AqeSkewJoinSpec pins salting CORRECTNESS, but no
@@ -32,9 +34,9 @@ object SkewCheck {
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
 
     def lineitem(d: String) =
-      spark.read.parquet(s"$d/lineitem.parquet").select("l_suppkey", "l_quantity")
+      Tables.lineitem(spark, d).select("l_suppkey", "l_quantity")
     def supplier(d: String) =
-      spark.read.parquet(s"$d/supplier.parquet")
+      Tables.supplier(spark, d)
         .select(col("s_suppkey").as("l_suppkey"), col("s_nationkey"))
     def aggPart(j: DataFrame): DataFrame =
       j.groupBy("s_nationkey")

@@ -1,11 +1,20 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * All queries take a `sfDir` (e.g. `/root/testdata/sf0.01`) and read one
-  * parquet file per table. Filters/projections applied on top of these scans
+  * parquet file per table through [[parquet]]: the schema comes from that
+  * file's footer, read on the driver, so building a table's scan starts no
+  * Spark job. Filters/projections applied on top of these scans
   * are pushed into the parquet reader by Catalyst (verify with
   * `.explain("formatted")` → `PushedFilters` / `ReadSchema`), so at 100 TB the
   * scan reads only the referenced columns and skips row groups via min/max
@@ -15,7 +24,43 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Reads the parquet file or directory at `path` as Spark's reader does,
+    * without the Spark job that infers its schema.
+    *
+    * Given no schema, Spark's reader infers one on every read with a Spark
+    * job that reads a single footer. Here that footer is read on the driver
+    * and passed to the reader as its schema. It is the one Spark's
+    * non-merging inference picks: `_common_metadata`, else `_metadata`, else
+    * the first data file in path order, among the files Spark's file index
+    * lists (it skips names that start with `_` or `.`). Spark's own
+    * `readSchemaFromFooter` converts it with a converter built from the
+    * session conf, so Spark's stored row schema and the nanosAsLong, INT96
+    * and binary-as-string settings apply as in the inference job, and a
+    * partitioned directory still gets its partition columns appended.
+    * Nothing is cached: each call reads the footer afresh. A path with no
+    * data file takes Spark's inferring read, which fails with Spark's own
+    * error. Reads that merge schemas need every footer and keep
+    * `spark.read`, as do reads of a streaming file sink's output.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val ss = spark.asInstanceOf[classic.SparkSession]
+    val files = new InMemoryFileIndex(ss, Seq(new Path(path)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    val summaries = Seq(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+    val footerFile = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+    footerFile match {
+      case Some(f) =>
+        val input = HadoopInputFile.fromStatus(f, ss.sessionState.newHadoopConf())
+        val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(input, SKIP_ROW_GROUPS))
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          footer, new ParquetToSparkSchemaConverter(ss.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   /** Minimum-parallelism guarantee for scans feeding CPU-heavy per-row work
     * (tokenize/shingle/hash, vector math, timestamp re-parsing).

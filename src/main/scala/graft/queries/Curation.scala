@@ -938,7 +938,7 @@ object Curation {
         v2src.write.mode("overwrite").parquet(dir)
         val v1 = docs.select(col("doc_id"), col("source"),
           md5(col("text")).as("h"))
-        val v2 = s.read.parquet(dir).select(col("doc_id"), col("source"),
+        val v2 = parquet(s, dir).select(col("doc_id"), col("source"),
           md5(col("text")).as("h"))
         v1.as("a").join(v2.as("b"),
             col("a.doc_id") === col("b.doc_id"), "full_outer")

@@ -443,7 +443,7 @@ object Dedup {
           bands.filter(col("bkt") < 90)
             .select(col("doc_id").as("corpus_id"), col("band"), col("sig"))
             .write.mode("overwrite").parquet(p))
-        val idx = s.read.parquet(idxDir)
+        val idx = parquet(s, idxDir)
         val bt = bands.filter(col("bkt") >= 90)
           .select(col("doc_id"), col("band"), col("sig"))
         val hits = bt.join(idx, Seq("band", "sig"))

@@ -379,7 +379,7 @@ object Similarity {
             .select(col("vec_id").as("cid"), col("ccid").as("cell"),
               col("e").as("ce2"), col("nrm").as("cn2"))
             .write.mode("overwrite").parquet(p))
-        val inv = s.read.parquet(idxDir)
+        val inv = parquet(s, idxDir)
         val qp = assign.filter(col("crk") <= 4 && col("vec_id") % 25 === 0)
           .join(n, "vec_id")
           .select(col("vec_id").as("qid"), col("ccid").as("cell"),
@@ -466,8 +466,8 @@ object Similarity {
             .write.mode("overwrite").parquet(s"$p/lists")
           cent.write.mode("overwrite").parquet(s"$p/centroids")
         }
-        val lists = s.read.parquet(s"$idxDir/lists")
-        val rcent = s.read.parquet(s"$idxDir/centroids")
+        val lists = parquet(s, s"$idxDir/lists")
+        val rcent = parquet(s, s"$idxDir/centroids")
         // ingest: assign ONLY the new batch against the read-back centroids
         val qp = assignTopK(batch, rcent, 4)
           .join(batch, "vec_id")

@@ -369,7 +369,7 @@ object Sinks {
         val dir = stagingDir("graft-mv-base", d)
         partialAgg(col("o_orderdate") < col("cutoff"))
           .write.mode("overwrite").parquet(dir)
-        val base = s.read.parquet(dir)
+        val base = parquet(s, dir)
         val delta = partialAgg(col("o_orderdate") >= col("cutoff"))
         base.unionByName(delta)
           .groupBy("o_custkey")
@@ -409,7 +409,7 @@ object Sinks {
         val dir = stagingDir("graft-mv-cdc-base", d)
         partialAgg(col("o_orderdate") < col("cutoff"))
           .write.mode("overwrite").parquet(dir)
-        val base = s.read.parquet(dir)
+        val base = parquet(s, dir)
         val inserts = partialAgg(col("o_orderdate") >= col("cutoff"))
         // the delete channel, folded to a retraction partial: negated
         // count and negated sum, same schema as the base/insert partials
@@ -449,7 +449,7 @@ object Sinks {
     val dir = stagingDir("graft-partitioned-orders", d)
     orders(s, d).write.mode("overwrite")
       .partitionBy("o_orderstatus").parquet(dir)
-    s.read.parquet(dir).filter(col("o_orderstatus") === "F")
+    parquet(s, dir).filter(col("o_orderstatus") === "F")
   }
 
   /** Staging paths for sink round-trip queries. Three lifecycle rules:

@@ -1146,7 +1146,7 @@ object TextAnalysis {
         // every later one probes the same files with zero write jobs
         val dir = Sinks.buildOnceDir("graft-phrase-index", d)(p =>
           post.write.mode("overwrite").parquet(p))
-        val idx = s.read.parquet(dir)
+        val idx = parquet(s, dir)
         val pr = idx.as("a")
           .join(idx.as("b"), col("a.doc_id") === col("b.doc_id") &&
             col("b.p") === col("a.p") + 1)

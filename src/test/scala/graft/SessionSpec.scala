@@ -47,7 +47,11 @@ class SessionSpec extends SparkTestBase {
     val lines = out.linesIterator.toSeq
     assert(lines.exists(_.matches("""PROF q_scan_parquet min=\d+\.\d{3} all=(\d+\.\d{3},){4}\d+\.\d{3} rows=\d+ .*""")),
       out)
-    assert(lines.exists(_.matches("""\s+job\s+\d+\s+wall=.*""")), out)
+    val jobRows = lines.filter(_.matches("""\s+job\s+\d+\s+exec=.*"""))
+    assert(jobRows.nonEmpty, out)
+    // no schema-inference job, and AQE's jobs carry their execution's label
+    assert(!jobRows.exists(_.contains("parquet at")), out)
+    assert(!jobRows.exists(_.contains("CompletableFuture")), out)
     assert(out.contains("== Physical Plan ==") && out.contains("Final Plan"), out)
   }
 }
