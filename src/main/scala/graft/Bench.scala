@@ -94,20 +94,7 @@ object Bench {
         fn(spark, sfDir).count()
       }
       val t = (System.nanoTime() - t0) / 1e9
-      // queries cache intermediates (encoded bitsets, LSH bands, IVF
-      // assignments); left in place they accumulate across the run and
-      // later queries pay the GC bill — clear outside the timer
-      spark.sharedState.cacheManager.clearCache()
-      // localCheckpoint blocks are NOT covered by clearCache(): they
-      // release only when the ContextCleaner sees their RDDs unreferenced,
-      // which needs a driver GC cycle. The loop queries checkpoint per
-      // round, so without this a pass can leave hundreds of orphaned
-      // blocks on the block manager and LATER passes/queries measure GC
-      // pressure, not their own work (observed as multi-second pass
-      // spreads on checkpoint-heavy queries). Runs OUTSIDE the timer;
-      // timing semantics (min over passes, what a pass executes) are
-      // unchanged.
-      System.gc()
+      Session.release(spark)
       r match {
         case Right(_) => (t, None)
         case Left(msg) => (-1.0, Some(msg))
@@ -175,10 +162,6 @@ object Bench {
     val wallCapped = scala.collection.mutable.ListBuffer.empty[String]
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
 
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => " "; case c => c.toString
-    } + "\""
     def f2(d: Double): String = f"$d%.3f"
     def buildRecord(partial: Boolean,
         calEnd: Double): String = {
@@ -200,7 +183,8 @@ object Bench {
       // messages only for queries whose FINAL result is an error — a query
       // that threw on one pass but completed another is a timing, not an error
       val errDetailJson = failed
-        .map(k => jstr(k) + ":" + jstr(errDetail.getOrElse(k, "unknown")))
+        .map(k => ToolPaths.jsonString(k) + ":" +
+          ToolPaths.jsonString(errDetail.getOrElse(k, "unknown")))
         .mkString("{", ",", "}")
       // errored queries carry -1 in "queries" and are excluded from the total
       val total = results.values.filter(_ >= 0).sum
@@ -228,7 +212,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","partial":$partial,""" +
         s""""queries":$qs,"spread":$spreads,"errors":$errs,""" +
         s""""error_detail":$errDetailJson,"calibration":$cal,""" +
-        s""""rerun_policy":${jstr(policy)},"wall_capped":$capped,""" +
+        s""""rerun_policy":${ToolPaths.jsonString(policy)},"wall_capped":$capped,""" +
         s""""wall_sec":${f2(wallSec)},"sf":"$sfDir"}"""
     }
     val lastPath = ToolPaths.resolve("tools/bench_last.json")

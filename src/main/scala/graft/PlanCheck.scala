@@ -77,7 +77,7 @@ object PlanCheck extends AdaptiveSparkPlanHelper {
           // runtime-chosen plan, not the initial guess
           if (aqe) df.collect()
           val s = shape(df.queryExecution.executedPlan)
-          spark.sharedState.cacheManager.clearCache()
+          Session.release(spark)
           s
         }
         name -> r
@@ -85,17 +85,9 @@ object PlanCheck extends AdaptiveSparkPlanHelper {
     def j(m: Map[String, Int]): String =
       m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }
         .mkString("{", ",", "}")
-    // full JSON string escape (ADVICE r9: quote-replacement alone let a
-    // backslash or control char in an exception message corrupt the artifact)
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val qjson = rows.map {
       case (n, Right(m)) => s""""$n":${j(m)}"""
-      case (n, Left(e)) => s""""$n":{"error":"${esc(e)}"}"""
+      case (n, Left(e)) => s""""$n":{"error":${ToolPaths.jsonString(e)}}"""
     }.mkString("{", ",", "}")
     val ok = rows.collect { case (_, Right(m)) => m }
     def tot(k: String) = ok.map(_(k)).sum

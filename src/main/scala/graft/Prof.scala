@@ -35,17 +35,8 @@ object Prof {
     * session is left running and its listeners as they were. */
   def profile(spark: SparkSession, name: String, dir: String): String = {
     val fn = SparkEntry.queries(name)
-    // localCheckpoint blocks are NOT cleared by the cache manager — they
-    // release only when the ContextCleaner sees their RDDs unreferenced,
-    // which needs a driver GC. Without it, checkpoint blocks from earlier
-    // passes accumulate and later passes measure GC pressure, not the
-    // query (observed: 2–22 s pass spreads on checkpoint-heavy queries).
-    def release(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-    }
     fn(spark, "/root/testdata/sf0.001").count()
-    release()
+    Session.release(spark)
 
     val jobs = mutable.LinkedHashMap.empty[Int, Job]
     val stageJob = mutable.HashMap.empty[Int, Job]
@@ -96,7 +87,7 @@ object Prof {
       counted = fn(spark, dir).groupBy().count()
       rows = counted.collect().head.getLong(0)
       val t = (System.nanoTime() - t0) / 1e9
-      release()
+      Session.release(spark)
       t
     } finally {
       bridge.drainListenerBus(spark)

@@ -256,7 +256,7 @@ object ScaleCheck {
         }
       }
       val t = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
+      Session.release(spark)
       r match {
         case Right(loops) => (t, loops)
         case Left(msg) => throw new RuntimeException(s"$name@$dir: $msg")
@@ -411,7 +411,7 @@ object ScaleCheck {
           case _ => "null"
         }
         val model = Model.get(n)
-          .map(m => s""","model":"${m.replace("\"", "'")}"""").getOrElse("")
+          .map(m => s""","model":${ToolPaths.jsonString(m)}""").getOrElse("")
         val band = rerunExp.get(n).map { e2 =>
           s""","exponent_rerun":${f(e2)},"exponent_band":[""" +
             s"${f(math.min(expo, e2))},${f(math.max(expo, e2))}]"

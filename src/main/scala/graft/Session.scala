@@ -23,4 +23,18 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Frees what a query left materialized, between passes and outside every
+    * timer: `clearCache()` drops the cached frames, and `System.gc()` frees
+    * the `localCheckpoint` blocks. The cache manager does not cover those:
+    * they are released only when the ContextCleaner sees their RDDs
+    * unreferenced, which needs a driver GC. Without it, the blocks of
+    * earlier passes pile up on the block manager, and later passes and
+    * queries measure GC pressure, not their own work (seen as 2–22 s pass
+    * spreads on checkpoint-heavy queries).
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    System.gc()
+  }
 }

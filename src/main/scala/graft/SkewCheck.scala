@@ -60,8 +60,9 @@ object SkewCheck {
     def once(df: => DataFrame): Double = {
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
-      spark.sharedState.cacheManager.clearCache()
-      (System.nanoTime() - t0) / 1e9
+      val t = (System.nanoTime() - t0) / 1e9
+      Session.release(spark)
+      t
     }
     // warm both shapes (codegen/classload) at the small skew dir
     Seq(() => plain(warm), () => salted(warm)).foreach(f => once(f()))

@@ -55,7 +55,7 @@ object StreamCheck {
       val t0 = System.nanoTime()
       val rows = SparkEntry.queries(name)(spark, dir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
+      Session.release(spark)
       // drain the async listener bus: progress events for the final batch
       // can trail the awaitTermination return by a beat
       Thread.sleep(500)

@@ -15,6 +15,20 @@ object ToolPaths {
     if (new java.io.File(rel).isAbsolute) rel
     else new java.io.File(repoRoot, rel).getPath
 
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character escaped, so no exception message or SQL text can break the
+    * record that carries it.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Prints a main's one-line JSON record and writes it to `rel`. */
   def publish(tag: String, rel: String, record: String): Unit = {
     println(record)

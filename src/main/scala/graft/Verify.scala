@@ -44,23 +44,10 @@ object Verify {
           System.err.println(s"[verify] $name failed: $msg")
         case Right(_) => ()
       }
-      // queries cache intermediates (bands, bitsets, norms); left in
-      // place they pin memory for the rest of the 100+-query session
-      spark.sharedState.cacheManager.clearCache()
+      Session.release(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // inverse of q's escaping, for re-reading a previous dump's oracle file
+    // inverse of ToolPaths.jsonString, for re-reading a previous dump's
+    // oracle file
     def unq(s: String): String = {
       val b = new StringBuilder; var i = 0
       while (i < s.length) {
@@ -114,12 +101,14 @@ object Verify {
         k -> SparkEntry.oracleSql.getOrElse(k, v)
       } ++ SparkEntry.oracleSql
         .filter { case (k, _) => only.isEmpty || only(k) })
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${ToolPaths.jsonString(k)}: ${ToolPaths.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Always written — {} on a clean run — so a comparator can distinguish
     // "query errored, message here" from "query was never requested".
     val errJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${ToolPaths.jsonString(k)}: ${ToolPaths.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     spark.stop()
     if (failures.nonEmpty) {

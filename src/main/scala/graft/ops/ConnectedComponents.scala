@@ -56,6 +56,7 @@ object ConnectedComponents {
     // overflow the distributed loop reads it twice more (symmetric
     // closure) — without the cache the upstream candidate-generation
     // pipeline (hashing, banding, self-join) would run three times
+    // ledger M01: the distributed path (> 1M edges) reads the edges three times
     val e0 = edges.toDF("a", "b").cache()
     try {
       if (driverEdgeLimit > 0 && driverEdgeLimit < Int.MaxValue) {
@@ -101,6 +102,7 @@ object ConnectedComponents {
     val sym = e.select(col("a").as("u"), col("b").as("v"))
       .unionByName(e.select(col("b").as("u"), col("a").as("v")))
       .distinct()
+      // ledger M02: every round of the distributed loop reads it
       .cache()
     // Iterative frames MUST truncate lineage each round: `labels` is
     // referenced four times per iteration, so the logical plan would grow

@@ -49,6 +49,7 @@ object SetSimilarity {
     // vocabCap is executor-side: nWords = cap/64 bitmask words per doc in
     // the encoding aggregate, so memory there grows linearly with the cap
     // times the doc count per partition.
+    // ledger M04: no declared query reaches it
     val base = e.select(col(idCol).as("doc_id"), col(elemCol).as("g")).cache()
     val top = base.groupBy("g").agg(count(lit(1)).as("k"))
       .orderBy(desc("k"), col("g")).limit(vocabCap + 1)
@@ -79,6 +80,7 @@ object SetSimilarity {
       bit_or(when(col("w") === w, col("b")).otherwise(0L)).as(s"bw$w"))
     val docsEnc = withDict.groupBy("doc_id")
       .agg(aggs.head, aggs.tail: _*)
+      // ledger M05: no declared query reaches it
       .cache()
     val a = docsEnc.select(
       col("doc_id").as("doc_a") +: col("n").as("na") +:
@@ -239,6 +241,7 @@ object SetSimilarity {
     // it here would pay a second materialization of the identical frame.
     val h =
       if (elemsHashed) base.select(col("doc_id"), col("g").as("hv"))
+      // ledger M06: all four callers slower without it
       else base.select(col("doc_id"), md5Long(col("g")).as("hv")).cache()
     val nH = bands * rows
     val minAggs = (0 until nH).map(j =>
@@ -262,6 +265,7 @@ object SetSimilarity {
     val bnd = hs.select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"),
         col("bs.sig").as("sig"))
+      // ledger M07: callers 1.9–6× slower without the three kernel checkpoints
       .localCheckpoint()
     val ba = bnd.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
     val bb = bnd.select(col("doc_id").as("doc_b"), col("band"), col("sig"))
@@ -270,6 +274,7 @@ object SetSimilarity {
       .select("doc_a", "doc_b").distinct()
       // candidate-id semi-join build + the verify join both read it;
       // eager for the same concurrent-twin reason as bnd above
+      // ledger M08: callers 1.9–6× slower without the three kernel checkpoints
       .localCheckpoint()
     val sz = h.groupBy("doc_id").agg(count(lit(1)).as("n"))
     // exact shared-element counts for CANDIDATES ONLY: both posting sides
@@ -292,6 +297,7 @@ object SetSimilarity {
     // cached, the semi-join against the candidate ids still ran twice in
     // concurrent stages.
     val hc = h.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+      // ledger M09: callers 1.9–6× slower without the three kernel checkpoints
       .localCheckpoint()
     val pa = hc.select(col("doc_id").as("doc_a"), col("hv"))
     val pb = hc.select(col("doc_id").as("doc_b"), col("hv"))

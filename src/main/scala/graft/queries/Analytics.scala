@@ -84,6 +84,7 @@ object Analytics {
           (0 to 3).map(i => bucket(i).as(s"b$i")): _*)
         // bucket sums derived from the (cached) per-token counts — ≤256 rows
         // each, broadcast back onto the token side
+        // ledger M10: q_heavy_hitters 2× slower without it
         val bc = b.cache()
         val joined = (0 to 3).foldLeft(bc.as("t")) { (acc, i) =>
           val si = bc.groupBy(col(s"b$i").as(s"k$i"))
@@ -129,7 +130,7 @@ object Analytics {
           .join(orders(s, d).select(col("o_orderkey"), col("o_custkey")),
             col("l_orderkey") === col("o_orderkey"))
           .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-          .distinct().cache()
+          .distinct()
         val nn = edges.agg(
           (count_distinct(col("c")) + count_distinct(col("s"))).as("n"))
         val outd = edges.groupBy("c").agg(count(lit(1)).as("od"))
@@ -203,6 +204,7 @@ object Analytics {
         val R = 1000000000000L
         // edges + out-degrees are loop-invariant: checkpointed ONCE and
         // re-joined every round (the reused-partitioning discipline)
+        // ledger M12: q_pagerank 2.3× slower without its three checkpoints
         val edges = partGraphEdges(s, d).localCheckpoint()
         val outd = edges.groupBy("src").agg(count(lit(1)).as("od"))
         // laid out on the per-round join key ONCE (Loop.edgeSide): every
@@ -213,6 +215,7 @@ object Analytics {
         val eo = graft.ops.Loop.edgeSide(edges, edges.join(outd, "src"))
         val nodes = edges.select(col("src").as("node"))
           .union(edges.select(col("dst").as("node"))).distinct()
+          // ledger M13: q_pagerank 2.3× slower without its three checkpoints
           .localCheckpoint()
         val n = nodes.count()
         val base = (15L * R) / (100L * n)
@@ -230,6 +233,7 @@ object Analytics {
             nodes("node") === outd("src"), "left")
           .select(col("node"), lit(R / n).as("rk"),
             col("has_out").isNull.as("dg"))
+          // ledger M14: q_pagerank 2.3× slower without its three checkpoints
           .localCheckpoint()
         // initial dangling mass: every node starts at rk = R/n exactly
         var dmass = (R / n) * ranks.filter(col("dg")).count()
@@ -330,12 +334,14 @@ object Analytics {
         val INF = 1000000000L
         // the loop-invariant edge side is laid out on src once, as for
         // q_pagerank (Loop.edgeSide)
+        // ledger M15: q_bfs slower, 34 → 38 jobs without its two checkpoints
         val edges0 = partGraphEdges(s, d).localCheckpoint()
         val edges = graft.ops.Loop.edgeSide(edges0, edges0)
         val nodes = edges0.select(col("src").as("node"))
           .union(edges0.select(col("dst").as("node"))).distinct()
         var dist = nodes.select(col("node"),
             when(col("node") % 100 === 0, 0L).otherwise(INF).as("dist"))
+          // ledger M16: q_bfs slower, 34 → 38 jobs without its two checkpoints
           .localCheckpoint()
         var iters = 0
         var changed = Long.MaxValue
@@ -639,7 +645,6 @@ object Analytics {
             concat(lit(" "),
               call_function("replace", col("text"), lit(" "), lit("  ")),
               lit(" ")).as("s"))
-          .localCheckpoint(eager = false)
         var iters = 0
         var done = false
         var lastCount = 0L
@@ -759,7 +764,6 @@ object Analytics {
             concat(lit(" "),
               call_function("replace", col("text"), lit(" "), lit("  ")),
               lit(" ")).as("s"))
-          .localCheckpoint(eager = false)
         var iters = 0
         var done = false
         while (!done && iters < M) {
@@ -1098,6 +1102,7 @@ object Analytics {
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
           .groupBy("ok")
           .agg(sort_array(collect_set(col("pk"))).as("ps"))
+          // ledger M19: q_copurchase 1.5× slower without its two caches
           .cache() // pair explode + degree counts both read it
         // all C(items, 2) ordered combinations of the per-order array —
         // map-side, ≤ ~21 structs per order; the per-order HOF cost is
@@ -1116,6 +1121,7 @@ object Analytics {
         // work — the bandedSharedCounts pattern)
         val deg = byOrder.select(explode(col("ps")).as("pk"))
           .groupBy("pk").agg(count(lit(1)).as("n_ord"))
+          // ledger M20: q_copurchase 1.5× slower without its two caches
           .cache()
         pairs
           .filter(col("n_co") >= 3)

@@ -59,7 +59,6 @@ object Curation {
             explode(wordShingles(col("ts"), 3)).as("s"))
           .select(col("doc_id"), col("bkt"), md5Long(col("s")).as("hv"))
           .distinct()
-          .cache() // train membership + test side both read it
         val trainSh = sh.filter(col("bkt") < 80).select("hv").distinct()
         val testSh = sh.filter(col("bkt") >= 90).select("doc_id", "hv")
         val tot = testSh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
@@ -119,7 +118,6 @@ object Curation {
           .select(col("source"), explode(wordShingles(col("ts"), 3)).as("s"))
           .select(col("source"), md5Long(col("s")).as("hv"))
           .distinct()
-          .cache() // pair join probes both sides; sz re-reads it
         val sz = g.groupBy("source").agg(count(lit(1)).as("n_grams"))
         val pair = g.select(col("source").as("src_a"), col("hv"))
           .join(g.select(col("source").as("src_b"), col("hv")), "hv")
@@ -392,6 +390,7 @@ object Curation {
             md5Long(array_join(slice(col("ts"), col("start").cast("int"),
               (col("fin") - col("start") + 1).cast("int")), " "))
               .as("fp"))
+          // ledger M23: q_chunk_cdc 1.5× slower without it
           .cache() // census build side + the output probe both read it
         val dcnt = f.groupBy("fp")
           .agg(count_distinct(col("doc_id")).as("n_docs"))
@@ -695,6 +694,7 @@ object Curation {
           .withColumn("bkt", col("hv") % 256)
           // five consumers (budget, weights, bucket sums, both selects) —
           // uncached, each re-tokenizes the corpus
+          // ledger M24: q_mix_sources 1.7× slower without it
           .cache()
         // allocation dims: all driver-scale (1 row; |sources| rows) —
         // every join against them broadcasts, the corpus never shuffles
@@ -711,11 +711,13 @@ object Curation {
         // eager checkpoint runs each chain exactly once (guide §2.4).
         val tgt = sw.crossJoin(tot).crossJoin(ww) // single-row sides
           .select(col("source"), expr("budget * w div tw").as("target"))
+          // ledger M25: q_mix_sources 2.8× slower without its three checkpoints
           .localCheckpoint()
         val br = tb.groupBy("source", "bkt").agg(sum("n_tok").as("btok"))
           .withColumn("cum", sum("btok").over(
             Window.partitionBy("source").orderBy("bkt")
               .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          // ledger M26: q_mix_sources 2.8× slower without its three checkpoints
           .localCheckpoint()
         val cut = br.join(tgt, Seq("source"))
           .filter(col("cum") >= col("target"))
@@ -737,6 +739,7 @@ object Curation {
           // budget/weight/cutoff aggregate chain executing TWICE in
           // overlapping twin jobs despite the cache. The eager checkpoint
           // runs the chain exactly once, up front (guide §2.4).
+          // ledger M27: q_mix_sources 2.8× slower without its three checkpoints
           .localCheckpoint()
         val fullSel = tb.join(broadcast(info), Seq("source"))
           .filter(col("bkt") < col("cutoff"))

@@ -155,6 +155,7 @@ object Dedup {
   private def minhashPairsFrom(
       sh: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val bands = minhashBands(sh)
+      // ledger M28: all five callers slower without it
       .cache() // self-joined below: compute the signatures once
     val a = bands.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
     val b = bands.select(col("doc_id").as("doc_b"), col("band"), col("sig"))
@@ -361,6 +362,7 @@ object Dedup {
         val exc = keyed.groupBy("k").agg(min("doc_id").as("canon"))
         val s1 = keyed.join(exc, Seq("k")).select(col("doc_id"), col("canon"))
         val s1k = s1.filter(col("doc_id") === col("canon"))
+          // ledger M29: q_dedup_chain slower without its caches
           .select("doc_id").cache() // restricts both downstream generators
         val p2 = minhashPairs(s, d)
           .join(s1k.withColumnRenamed("doc_id", "doc_a"),
@@ -371,7 +373,9 @@ object Dedup {
           p2.select(col("doc_a").as("a"), col("doc_b").as("b")),
           "q_dedup_chain_minhash")
           .filter(col("node") =!= col("component"))
+          // ledger M30: q_dedup_chain slower without its caches
           .select(col("node"), col("component")).cache()
+        // ledger M31: q_dedup_chain slower without its caches
         val s2k = s1k.join(s2d.select(col("node").as("doc_id")),
           Seq("doc_id"), "left_anti").cache()
         val cp2 = Similarity.cosinePairs(s, d)
@@ -434,7 +438,6 @@ object Dedup {
       (s, d) =>
         val bands = minhashBands(shingleHashes(s, d))
           .withColumn("bkt", md5Long(col("doc_id").cast("string")) % 100)
-          .cache() // corpus index write + batch probe both read it
         // persist the corpus index ONCE per input (Sinks.buildOnceDir),
         // then probe the READ-BACK files — the declared result flows
         // through the stored index, not the in-memory frame, and repeat
@@ -490,6 +493,7 @@ object Dedup {
         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
         |ORDER BY doc_a, doc_b""".stripMargin) {
       (s, d) =>
+        // ledger M33: q_simhash_pairs 1.3× slower without it
         val sig = simhashes(s, d).cache() // self-joined: compute once
         // Pigeonhole-blocked equi-join instead of the O(n²) nested-loop
         // all-pairs compare — see graft.ops.HammingJoin. Radius 3 is the
@@ -556,17 +560,21 @@ object Dedup {
         // (1–4 s CPU, 6 s GC: contention, not work). Eager runs each
         // shared chain exactly once, up front — the 8f06efc kernel fix
         // applied to this query's own staging frames.
+        // ledger M34: q_minhash_recall 2× slower without its four checkpoints
         val sh = shingleHashes(s, d).localCheckpoint()
         val cand = minhashPairsFrom(sh)
           .filter(col("doc_a") < ProbeDocs) // probe-bounded measurement
+          // ledger M35: q_minhash_recall 2× slower without its four checkpoints
           .localCheckpoint() // counted AND hit-joined
         val e3 = sh.distinct()
           .select(col("doc_id"), col("hv").as("g"))
+          // ledger M36: q_minhash_recall 2× slower without its four checkpoints
           .localCheckpoint() // read 3×: sizes + both inverted-index sides
         val truth = graft.ops.SetSimilarity
           .naiveJaccardPairs(e3, "doc_id", "g", 0.5,
             aPred = col("doc_id") < ProbeDocs, broadcastProbe = true)
           .select("doc_a", "doc_b")
+          // ledger M37: q_minhash_recall 2× slower without its four checkpoints
           .localCheckpoint() // counted AND hit-joined below
         val nT = truth.agg(count(lit(1)).as("n_truth"))
         val nC = cand.agg(count(lit(1)).as("n_cand"))
@@ -638,6 +646,7 @@ object Dedup {
         // this query's own staging frames (same conversion as
         // q_minhash_recall).
         val tok = spread(documents(s, d))
+          // ledger M38: q_simhash_recall 1.9× slower without its four checkpoints
           .select(col("doc_id"), explode(toks).as("t")).localCheckpoint()
         // k = 1 deliberately at this radius: widening the combo key to
         // k = 3 means C(11,3) = 165 combos — the ×165 explode and the
@@ -650,10 +659,12 @@ object Dedup {
         // candidate stage joins probe×corpus bucket rows instead of
         // generating the full corpus×corpus candidate set and discarding
         // 97% of it (round 11 — the query's largest avoidable cost)
+        // ledger M39: q_simhash_recall 1.9× slower without its four checkpoints
         val cand = graft.ops.HammingJoin
           .pairsWithin(simhashesFromTok(tok).localCheckpoint(), "doc_id",
             "simhash", 60, 8, aPred = col("doc_a") < ProbeDocs)
           .select("doc_a", "doc_b")
+          // ledger M40: q_simhash_recall 1.9× slower without its four checkpoints
           .localCheckpoint() // counted AND hit-joined
         // partitioned by doc_id BEFORE the (doc_id, t) groupBy (round 17):
         // hash(doc_id) already satisfies the (doc_id, t) clustering, so
@@ -670,12 +681,14 @@ object Dedup {
           .repartition(s.sessionState.conf.numShufflePartitions,
             col("doc_id"))
           .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
+          // ledger M41: q_simhash_recall slower without the forced cache
           .cache() // probe postings + candidate postings + sizes read it
         // eager via count(), NOT a localCheckpoint: a checkpoint loses the
         // hash(doc_id) outputPartitioning under AQE (the q_pagerank edge
         // lesson) and the sizes aggregate would re-shuffle; the built
         // InMemoryRelation keeps the layout AND is already materialized
         // when the concurrent consumers arrive
+        // ledger M42: q_simhash_recall slower without the forced cache
         tokc.count()
         // Sparse inverted-index truth kernel: the weighted intersection
         // Σ min(ca, cb) comes from an EQUI-JOIN on the token — a probe
@@ -705,6 +718,7 @@ object Dedup {
             "doc_b")
           .filter(col("smin") * 8 >= (col("na") + col("nb")) * 3)
           .select("doc_a", "doc_b")
+          // ledger M43: q_simhash_recall 1.9× slower without its four checkpoints
           .localCheckpoint() // counted AND hit-joined
         val nT = truth.agg(count(lit(1)).as("n_truth"))
         val nC = cand.agg(count(lit(1)).as("n_cand"))
@@ -798,6 +812,7 @@ object Dedup {
           .select(col("doc_id"),
             explode(array_distinct(wordShingles(toks, 2))).as("g"))
           .select(col("doc_id"), md5Long(col("g")).as("g"))
+          // ledger M44: q_dedup_ngram_recall 1.9× slower without it
           .localCheckpoint()
         val found = graft.ops.SetSimilarity
           .bandedJaccardPairs(h, "doc_id", "g", 0.28, bands, rows,
@@ -891,6 +906,7 @@ object Dedup {
         // it. Pair volume is band-bounded, so the frame is small.
         val jp = graft.ops.SetSimilarity
           .bandedJaccardPairs(e, "doc_id", "g", 0.28, bands, rows)
+          // ledger M45: q_hard_negatives 6× slower without it
           .localCheckpoint()
         val sym = jp.select(col("doc_a").as("d"), col("doc_b").as("n"),
             col("jacc"))
@@ -993,6 +1009,7 @@ object Dedup {
         |ORDER BY doc_id, span_start""".stripMargin) {
       (s, d) =>
         val f = windowFps(s, d)
+          // ledger M46: q_dedup_spans 1.9× slower without it
           .cache() // duplicated-fp build side + the probe side read it
         val dup = f.groupBy("fp")
           .agg(count_distinct(col("doc_id")).as("nd"))
@@ -1060,7 +1077,6 @@ object Dedup {
         |ORDER BY n.doc_id""".stripMargin) {
       (s, d) =>
         val f = windowFps(s, d)
-          .cache() // first-site build side + the occurrence probe read it
         val g = f.groupBy("fp")
           .agg(count(lit(1)).as("n_occ"),
             min(struct(col("doc_id"), col("pos"))).as("first"))

@@ -82,9 +82,8 @@ object FlagshipAnalog {
             col("value").isNotNull && !isnan(col("value")))
           .select((col("user_id") % 5).as("grp"),
             col("user_id"), col("event_type"), col("ts"))
-          .cache() // pairs + the final emit join both read it
 
-        val pairs = base.select("grp", "user_id", "event_type").distinct().cache()
+        val pairs = base.select("grp", "user_id", "event_type").distinct()
         val ranked = pairs.groupBy("grp", "user_id")
           .agg(count(lit(1)).as("m"))
           .withColumn("rank", row_number().over(

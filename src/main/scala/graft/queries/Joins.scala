@@ -469,6 +469,7 @@ object Joins {
           .select(least(col("x"), col("y")).as("a"),
             greatest(col("x"), col("y")).as("b"))
           .distinct()
+          // ledger M50: q_triangles 1.7× slower without it
           .cache() // three self-join arms + the edge count read it
         val tri = e.as("e1")
           .join(e.select(col("a").as("b"), col("b").as("c")).as("e2"), "b")

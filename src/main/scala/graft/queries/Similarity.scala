@@ -202,6 +202,7 @@ object Similarity {
     */
   private[queries] def cosinePairs(s: org.apache.spark.sql.SparkSession, d: String) = {
     val bits = adaptiveBits(embeddingCount(s, d))
+    // ledger M51: q_dedup_cosine 0.40 → 0.49 s without it
     val nb = bucketsFrom(withNorms(s, d), bits).cache() // probe side + join-backs
     val masks: Seq[Long] = 0L +:
       ((0 until bits).map(1L << _) ++
@@ -365,12 +366,11 @@ object Similarity {
          |      FROM cand)
          |SELECT qid, rk, cid, sim FROM r WHERE rk <= 3 ORDER BY qid, rk""".stripMargin) {
       (s, d) =>
-        val n = withNorms(s, d).cache() // assignment + query probes + lists
+        val n = withNorms(s, d)
         val cent = n
           .filter(col("vec_id") % ivfModulus(embeddingCount(s, d)) === 1)
           .select(col("vec_id").as("ccid"), col("e").as("ce"), col("nrm").as("cn"))
         val assign = assignTopK(n, cent, 4)
-          .cache() // inverted-list build + query probes
         // build the index ONCE per input into the lake slot (build-once
         // semantics — repeat executions skip the write), probe the
         // read-back files
@@ -448,7 +448,6 @@ object Similarity {
       (s, d) =>
         val n = withNorms(s, d)
           .withColumn("bkt", md5Long(col("vec_id").cast("string")) % 100)
-          .cache() // corpus index build + batch probe both read it
         val corpus = n.filter(col("bkt") < 90)
         val batch = n.filter(col("bkt") >= 90)
         val cent = corpus
@@ -527,16 +526,18 @@ object Similarity {
          |FROM x GROUP BY ccid, dim
          |ORDER BY ccid, dim""".stripMargin) {
       (s, d) =>
+        // ledger M55: q_kmeans_step 3.6× slower without its two caches
         val n = withNorms(s, d).cache() // assignment + quantized join-back
         val cent = n
           .filter(col("vec_id") % ivfModulus(embeddingCount(s, d)) === 1)
           .select(col("vec_id").as("ccid"), col("e").as("ce"), col("nrm").as("cn"))
-        // cache boundary after the scale stage (the q_quantize rule): stops
+        // cache boundary after the scale stage (the q_ann_quant rule): stops
         // CollapseProject inlining array_max into the per-element lambda
         val scaled = n
           .withColumn("amax", array_max(transform(col("e"), x => abs(x))))
           .filter(col("amax") > 0)
           .withColumn("scale", lit(127.0) / col("amax"))
+          // ledger M56: q_kmeans_step 3.6× slower without its two caches
           .cache()
         val qvDf = scaled.withColumn("q",
           transform(col("e"), x => floor(x * col("scale") + 0.5).cast("long")))
@@ -713,15 +714,11 @@ object Similarity {
          |  n_hits::DOUBLE / n_expected AS recall
          |FROM res CROSS JOIN exn ORDER BY method""".stripMargin) {
       (s, d) =>
-        // ONE cached norms pass feeds all four pipelines — signatures and
-        // norms are computed once, exactly as a production recall job would
-        // stage them (recomputing the vector math per variant is the wrong
-        // plan at any scale)
-        val n = withNorms(s, d).cache()
+        val n = withNorms(s, d)
         val bits = adaptiveBits(embeddingCount(s, d))
         val nb = bucketsFrom(n, bits)
         val ex = exactRankedFrom(n, recallQPred)
-          .select("qid", "cid").cache() // probed by all three variants
+          .select("qid", "cid")
         val exN = ex.agg(count(lit(1)).as("n_expected"))
         def recallRow(m: String, approx: DataFrame) =
           approx.select("qid", "cid").join(ex, Seq("qid", "cid"))
@@ -823,19 +820,15 @@ object Similarity {
          |  CAST(len(list_filter(qv, q -> abs(q) = 127)) AS BIGINT) AS n_sat
          |FROM q ORDER BY vec_id""".stripMargin) {
       (s, d) =>
-        // cache boundary after the scale stage: without it CollapseProject
-        // inlines amax/scale into the quantization lambda and array_max
-        // re-evaluates once per ELEMENT — O(d²) per vector instead of O(d),
-        // a 1000× blowup at real embedding widths. The boundary materializes
-        // scale once per vector (exactly what the oracle's CTE column does)
-        // and the lambda reads it back as a plain attribute.
+        // amax stays a projected column: the optimized plan runs array_max
+        // once per vector, not once per element of the quantization lambda
+        // (q_ann_quant's plan would inline it, so it keeps a cache there)
         val scaled = embeddings(s, d)
           .select(col("vec_id"),
             transform(col("embedding"), _.cast("double")).as("e"))
           .withColumn("amax", array_max(transform(col("e"), x => abs(x))))
           .filter(col("amax") > 0)
           .withColumn("scale", lit(127.0) / col("amax"))
-          .cache()
         scaled
           .withColumn("qv",
             transform(col("e"), x => floor(x * col("scale") + 0.5).cast("long")))
@@ -942,15 +935,17 @@ object Similarity {
       (s, d) =>
         // ONE cached norms pass feeds the float baseline and the quantized
         // ranking — same staging discipline as q_ann_recall
+        // ledger M60: q_ann_quant 1.25× slower without its three caches
         val n = withNorms(s, d).cache()
-        // second cache boundary after the scale stage (the q_quantize rule):
-        // stops CollapseProject from inlining array_max into the per-element
-        // quantization lambda (O(d²)/vector); both join sides re-derive qv
-        // from the cached scale with one O(d) map each
+        // cache boundary after the scale stage: without it the optimized
+        // plan inlines array_max into the per-element quantization lambda
+        // (O(d²)/vector); both join sides re-derive qv from the cached
+        // scale with one O(d) map each
         val scaled = n
           .withColumn("amax", array_max(transform(col("e"), x => abs(x))))
           .filter(col("amax") > 0)
           .withColumn("scale", lit(127.0) / col("amax"))
+          // ledger M61: q_ann_quant 1.25× slower without its three caches
           .cache()
         val qnm = scaled
           .withColumn("qv",
@@ -959,6 +954,7 @@ object Similarity {
             aggregate(transform(col("qv"), x => x * x), lit(0L), (a, b) => a + b))
           .select("vec_id", "qv", "qnrm")
         val ex = exactRankedFrom(n, recallQPred)
+          // ledger M62: q_ann_quant 1.25× slower without its three caches
           .select("qid", "cid").cache()
         val exN = ex.agg(count(lit(1)).as("n_expected"))
         val iq = qnm.filter(recallQPred)
@@ -1083,6 +1079,7 @@ object Similarity {
          |FROM hits CROSS JOIN exn""".stripMargin) {
       (s, d) =>
         val M = 8; val SubDim = 8; val KCent = 16
+        // ledger M63: q_ann_pq +30% at sf1 without its three caches
         val n = withNorms(s, d).cache()
         val sub = n
           .select(col("vec_id"), col("e"),
@@ -1118,6 +1115,7 @@ object Similarity {
           .select(col("vec_id"), col("m"),
             graft.functions.VectorExprs
               .pqArgmin(col("sv"), col("cws"), SubDim).as("k"))
+          // ledger M64: q_ann_pq +30% at sf1 without its three caches
           .cache() // reconstruction norms + the ADC pair stage read it
         def chain(p: String): Column =
           (0 until M).map(i => col(s"$p$i")).reduce(_ + _)
@@ -1149,6 +1147,7 @@ object Similarity {
           .withColumn("rk", row_number().over(rankW))
           .filter(col("rk") <= 3)
           .select("qid", "cid")
+        // ledger M65: q_ann_pq +30% at sf1 without its three caches
         val ex = exactRankedFrom(n, recallQPred).select("qid", "cid").cache()
         val exN = ex.agg(count(lit(1)).as("n_expected"))
         pt.join(ex, Seq("qid", "cid"))
@@ -1241,6 +1240,7 @@ object Similarity {
           .repartition(s.sessionState.conf.numShufflePartitions,
             col("doc_id"))
           .distinct()
+          // ledger M66: q_hybrid_search slower, 21 → 22 jobs without it
           .cache() // df build + query side + candidate probe all read it
         val idf = dt.groupBy("tok").agg(count(lit(1)).as("df"))
           .crossJoin(broadcast(nd))
@@ -1350,6 +1350,7 @@ object Similarity {
         // one tokenize pass feeds tf, lens, df, sl and the query side
         val tok = docs
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+          // ledger M67: q_bm25 1.3× slower without its two caches
           .cache()
         // tf grouped over a doc_id-partitioned exchange (round 17):
         // hash(doc_id) satisfies the (doc_id, tok) clustering, so the
@@ -1362,6 +1363,7 @@ object Similarity {
         val parts = s.sessionState.conf.numShufflePartitions
         val tfd = tok.repartition(parts, col("doc_id"))
           .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+          // ledger M68: q_bm25 1.3× slower without its two caches
           .cache() // feeds the df/idf aggregate AND the scoring join —
                    // uncached, JobsX showed the tf pass running twice
         val lens = tok.groupBy("doc_id").agg(count(lit(1)).as("len"))
@@ -1494,7 +1496,7 @@ object Similarity {
          |FROM m LEFT JOIN dup ON m.vec_id = dup.vb
          |ORDER BY m.vec_id""".stripMargin) {
       (s, d) =>
-        val n = withNorms(s, d).cache() // assignment + two pair sides
+        val n = withNorms(s, d)
         val cent = n
           .filter(col("vec_id") % ivfModulus(embeddingCount(s, d)) === 1)
           .select(col("vec_id").as("ccid"), col("e").as("ce"),
@@ -1502,7 +1504,6 @@ object Similarity {
         val m = assignTopK(n, cent, 1).join(n, "vec_id")
           .select(col("vec_id"), col("ccid").as("cell"), col("e"),
             col("nrm"))
-          .cache() // pair sides + final projection
         val a = m.select(col("cell"), col("vec_id").as("va"),
           col("e").as("ea"), col("nrm").as("na"))
         val b = m.select(col("cell"), col("vec_id").as("vb"),
@@ -1795,6 +1796,7 @@ object Similarity {
       .select(col("vec_id"),
         transform(col("embedding"),
           x => floor(x.cast("double") * 1000000).cast("long")).as("xs"))
+      // ledger M71: q_kmeans slower without its three checkpoints
       .localCheckpoint()
     // exact squared distance: fold over the zipped (x, c) pairs; a NULL
     // centroid array (emptied cluster / padded seed) nulls the whole
@@ -1864,6 +1866,7 @@ object Similarity {
       else minDist.crossJoin(broadcast(seedRow))
         .select(col("vec_id"), col("xs"),
           least(col("dist"), dn).as("dist")))
+        // ledger M72: q_kmeans slower without its three checkpoints
         .localCheckpoint() // reused by the next step's running min
       pickByCum(md, kmSeedFrac(j)).foreach(v => seeds = seeds :+ v)
       minDist = md
@@ -1912,6 +1915,7 @@ object Similarity {
     val assign0 = packed.crossJoin(broadcast(cent0))
       .select(col("vec_id"), col("xs"), argminCid(col("xs")).as("cid"))
       .observe("q_kmeans_round_0", initObs.head, initObs.tail: _*)
+    // ledger M73: q_kmeans slower without its three checkpoints
     var assign = assign0.localCheckpoint()
     var centM = assign0.queryExecution.observedMetrics("q_kmeans_round_0")
     val nVecs = centM.getAs[Long]("nv")
@@ -2038,6 +2042,7 @@ object Similarity {
         col("ce"), col("cn"))
       .withColumn("rk", row_number().over(wRel))
       .filter(col("rk") <= 20).drop("rk")
+      // ledger M74: q_mmr 10 → 13 jobs without it
       .cache() // Q·K rows — feeds both bounded collects
     val rel: Map[Long, Seq[(Long, Double)]] = pool
       .select("qid", "cid", "rel").collect()
@@ -2375,6 +2380,7 @@ object Similarity {
     * the inverted lists.
     */
   private[queries] def ivfRanked(s: SparkSession, d: String): DataFrame =
+    // ledger M75: q_ann_ivf +37% at sf1 without its two caches
     ivfRankedFrom(withNorms(s, d).cache(), // assignment + two vector join-backs
       ivfModulus(embeddingCount(s, d)))
 
@@ -2383,6 +2389,7 @@ object Similarity {
     val cent = n.filter(col("vec_id") % ivfMod === 1)
       .select(col("vec_id").as("ccid"), col("e").as("ce"), col("nrm").as("cn"))
     val assign = assignTopK(n, cent, 4)
+      // ledger M76: q_ann_ivf +37% at sf1 without its two caches
       .cache() // inverted lists + query probes read it once each
     val inv = assign.filter(col("crk") === 1).join(n, "vec_id")
       .select(col("vec_id").as("cid"), col("ccid").as("cell"),

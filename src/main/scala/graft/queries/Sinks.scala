@@ -137,6 +137,7 @@ object Sinks {
         .withColumn("zval", zCol)
         .select(col("x"), col("y"), expr("zval div 16384").as("file_z"),
           expr("x div 16").as("file_x"), expr("y div 16").as("file_y"))
+        // ledger M77: q_zorder 1.13× slower without it
         .cache() // one narrow pass feeds the box count + three stats aggs
       val box = col("x1") >= 100 && col("x0") <= 199 &&
         col("y1") >= 300 && col("y0") <= 399
